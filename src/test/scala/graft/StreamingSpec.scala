@@ -3,7 +3,13 @@ package graft
 import java.nio.file.Files
 import java.sql.DriverManager
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan}
+import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.streaming.operators.stateful.StatefulOperator
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 
 import graft.ops.AdAnalytics
 import graft.sink.{InMemoryProvider, InMemoryStore, JdbcStore, KeyedStore, StoreProvider}
@@ -346,6 +352,162 @@ class StreamingSpec extends SparkSpec {
     val st = new JdbcStore(DriverManager.getConnection(s"jdbc:derby:$dir/db"))
     try assert(st.scan("ad_user_click_count").toMap ==
       (1 to 8).map(u => List("2026-01-01", u.toString, "1") -> 2L).toMap)
+    finally st.close()
+  }
+
+  /** The partitions AdClickStream coalesces its source to: the default
+    * parallelism of SparkSpec's `local[4]` session. */
+  private val SourceParts = 4
+
+  /** `q`'s last micro-batch plan from its source scan up to, not
+    * including, the first exchange or stateful operator: the scan
+    * first, then its ancestors in order. */
+  private def sourceStage(q: StreamingQuery): Seq[SparkPlan] = {
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    def down(p: SparkPlan): Option[List[SparkPlan]] = p match {
+      case _: MicroBatchScanExec => Some(List(p))
+      case _ => p.children.iterator.map(down).collectFirst { case Some(path) => p :: path }
+    }
+    val up = down(plan).getOrElse(fail(s"no source scan in\n$plan")).reverse
+    up.head +: up.tail.takeWhile {
+      case _: Exchange | _: StatefulOperator => false
+      case _ => true
+    }
+  }
+
+  test("each ad-click query coalesces a many-chunk source to the core count, once, before its first exchange") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    val n = SourceParts
+    // exactly one batch, so the last execution is the one that read
+    // the chunks (AvailableNow and processing-time triggers end on a
+    // no-data batch that advances the watermark)
+    val once = Trigger.Once()
+    type Start = (DataFrame, StoreProvider, String) => StreamingQuery
+    val queries = Seq[(String, Start)](
+      ("statsQuery", AdClickStream.statsQuery(_, _, _, trigger = once)),
+      ("adStatQuery", AdClickStream.adStatQuery(_, _, _, trigger = once)),
+      ("trendQuery", AdClickStream.trendQuery(_, _, _, trigger = once)))
+    for ((name, start) <- queries) {
+      val store = s"fanout-plan-$name"
+      InMemoryStore.clear(store)
+      val mem = MemoryStream[String]
+      (0 until 3 * n).foreach(i => mem.addData(line(T0 + 1000L * i, "East", "Metro", i, 1)))
+      val q = start(mem.toDF(), InMemoryProvider(store),
+        Files.createTempDirectory("graft-ckpt").toString)
+      try {
+        q.awaitTermination()
+        val stage = sourceStage(q)
+        val scan = stage.head.asInstanceOf[MicroBatchScanExec]
+        assert(scan.inputPartitions.size == 3 * n, name)
+        val coalesces = stage.collect { case c: CoalesceExec => c.numPartitions }
+        assert(coalesces == Seq(n), s"$name source stage: ${stage.map(_.nodeName)}")
+      } finally q.stop()
+    }
+  }
+
+  /** 24 clicks over two minutes of 2026-01-01 in which no user reaches
+    * the default threshold of 100. */
+  private val fanoutLines: Seq[String] = Seq(
+    (0, "East", "Metro", 1, 1), (5, "East", "Metro", 1, 1), (10, "East", "Metro", 2, 1),
+    (15, "East", "Port", 3, 2), (20, "East", "Port", 3, 1), (25, "West", "Hills", 4, 3),
+    (30, "West", "Hills", 4, 3), (35, "West", "Hills", 5, 3), (40, "West", "Vale", 6, 2),
+    (45, "East", "Metro", 2, 2), (50, "East", "Metro", 1, 3), (55, "West", "Vale", 6, 2),
+    (60, "East", "Metro", 1, 1), (65, "East", "Port", 3, 2), (70, "West", "Hills", 5, 1),
+    (75, "West", "Hills", 4, 3), (80, "East", "Metro", 2, 1), (85, "West", "Vale", 6, 4),
+    (90, "East", "Port", 3, 4), (95, "East", "Metro", 1, 2), (100, "West", "Hills", 5, 3),
+    (105, "West", "Vale", 6, 2), (110, "East", "Metro", 2, 1), (115, "East", "Port", 3, 2)
+  ).map { case (sec, prov, city, user, ad) => line(T0 + 1000L * sec, prov, city, user, ad) }
+
+  test("run(): one chunk and 12 chunks of the same lines publish identical tables, equal to a hand count") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    def publish(store: String, chunks: Seq[Seq[String]]): Map[String, Map[List[String], Long]] = {
+      InMemoryStore.clear(store)
+      val mem = MemoryStream[String]
+      chunks.foreach(c => mem.addData(c))
+      val qs = AdClickStream.run(s, mem.toDF(), InMemoryProvider(store),
+        Files.createTempDirectory("graft-run").toString)
+      try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+      val st = new InMemoryStore(store)
+      AdClickStream.Tables.filter(_ != "graft_applied_batch")
+        .map(t => t -> st.scan(t).toMap).toMap
+    }
+    val chunks = fanoutLines.grouped(2).toSeq
+    assert(chunks.size == 3 * SourceParts)
+    val one = publish("fanout-one", Seq(fanoutLines))
+    assert(publish("fanout-many", chunks) == one)
+
+    val d = "2026-01-01"
+    assert(one("ad_user_click_count") == Map(
+      List(d, "1", "1") -> 3L, List(d, "1", "2") -> 1L, List(d, "1", "3") -> 1L,
+      List(d, "2", "1") -> 3L, List(d, "2", "2") -> 1L,
+      List(d, "3", "1") -> 1L, List(d, "3", "2") -> 3L, List(d, "3", "4") -> 1L,
+      List(d, "4", "3") -> 3L,
+      List(d, "5", "1") -> 1L, List(d, "5", "3") -> 2L,
+      List(d, "6", "2") -> 3L, List(d, "6", "4") -> 1L))
+    assert(one("ad_blacklist").isEmpty)
+    assert(one("ad_stat") == Map(
+      List(d, "East", "Metro", "1") -> 6L, List(d, "East", "Metro", "2") -> 2L,
+      List(d, "East", "Metro", "3") -> 1L,
+      List(d, "East", "Port", "1") -> 1L, List(d, "East", "Port", "2") -> 3L,
+      List(d, "East", "Port", "4") -> 1L,
+      List(d, "West", "Hills", "1") -> 1L, List(d, "West", "Hills", "3") -> 5L,
+      List(d, "West", "Vale", "2") -> 3L, List(d, "West", "Vale", "4") -> 1L))
+    // count desc, then ad asc: ad 3 beats ad 4 in East, ad 1 beats ad 4 in West
+    assert(one("ad_province_top3") == Map(
+      List(d, "East", "1") -> 7L, List(d, "East", "2") -> 5L, List(d, "East", "3") -> 1L,
+      List(d, "West", "3") -> 5L, List(d, "West", "2") -> 3L, List(d, "West", "1") -> 1L))
+    assert(one("ad_click_trend") == Map(
+      List("202601010000", "1") -> 4L, List("202601010000", "2") -> 4L,
+      List("202601010000", "3") -> 4L,
+      List("202601010001", "1") -> 4L, List("202601010001", "2") -> 4L,
+      List("202601010001", "3") -> 2L, List("202601010001", "4") -> 2L))
+  }
+
+  test("statsQuery on Derby: a crash in a 12-chunk first batch, then a restart, applies every count once") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    val n = SourceParts
+    val dir = Files.createTempDirectory("graft-derby-stats").toString
+    val boot = DriverManager.getConnection(s"jdbc:derby:$dir/db;create=true")
+    Seq(
+      """CREATE TABLE ad_user_click_count (k1 VARCHAR(32), k2 VARCHAR(32),
+        | k3 VARCHAR(32), v BIGINT, PRIMARY KEY (k1, k2, k3))""".stripMargin,
+      "CREATE TABLE ad_blacklist (k1 VARCHAR(32), v BIGINT, PRIMARY KEY (k1))",
+      """CREATE TABLE graft_applied_batch (k1 VARCHAR(32), k2 VARCHAR(32),
+        | v BIGINT, PRIMARY KEY (k1, k2))""".stripMargin
+    ).foreach(boot.createStatement().executeUpdate)
+    boot.close()
+
+    // two clicks per user, in different chunks: a double-applied
+    // partition would show 4 and a dropped one 0
+    val users = 3 * n
+    val mem = MemoryStream[String]
+    (0 until users).foreach(c => mem.addData(
+      line(T0 + 1000L * c, "East", "Metro", c + 1, 1),
+      line(T0 + 1000L * c + 500, "East", "Metro", (c + users / 2) % users + 1, 1)))
+    val provider = CrashOnceProvider(s"jdbc:derby:$dir/db")
+    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+
+    CrashOnceProvider.armed.set(true)
+    val first = AdClickStream.statsQuery(mem.toDF(), provider, ckpt)
+    try intercept[StreamingQueryException] { first.processAllAvailable() }
+    finally first.stop()
+    assert(!CrashOnceProvider.armed.get, "the injected crash never fired")
+
+    // restart on the same checkpoint: batch 0 runs again
+    val again = AdClickStream.statsQuery(mem.toDF(), provider, ckpt)
+    try {
+      again.processAllAvailable()
+      assert(again.recentProgress.map(_.batchId).headOption.contains(0L))
+    } finally again.stop()
+    val st = new JdbcStore(DriverManager.getConnection(s"jdbc:derby:$dir/db"))
+    try assert(st.scan("ad_user_click_count").toMap ==
+      (1 to users).map(u => List("2026-01-01", u.toString, "1") -> 2L).toMap)
     finally st.close()
   }
 
