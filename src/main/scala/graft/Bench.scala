@@ -281,7 +281,8 @@ object Bench {
       .mkString("{", ",", "}")
     // the 20 slowest (steady desc, id asc): the stdout line's
     // always-fits per-query signal when the full map overflows
-    val top = results.sortBy { case (k, _, w, _, _, _) => (-w, qid(k)) }
+    val top = results
+      .sortBy { case (k, _, w, _, _, _) => (-w, qid(k).toIntOption.getOrElse(Int.MaxValue)) }
       .take(20)
       .map { case (k, _, w, _, _, _) => s"\"" + qid(k) + "\":" + f2(w) }
       .mkString("{", ",", "}")

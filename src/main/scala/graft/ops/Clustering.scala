@@ -3,7 +3,10 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable
 
 /** Near-duplicate cluster resolution: connected components over a
   * pair set, plus canonical-representative selection per cluster.
@@ -15,22 +18,32 @@ import org.apache.spark.storage.StorageLevel
   * keeping A and C double-counts the content even though (A, C) was
   * never emitted as a pair.
   *
-  * Algorithm: the alternating large-star / small-star method of
-  * Kiveris et al., "Connected Components in MapReduce and Beyond"
-  * (SoCC 2014) — the published shuffle-native formulation (also what
-  * GraphFrames ships). Each round is two self-joins on the CURRENT
-  * edge set; the edge count never grows beyond the input pair count
-  * (each node keeps at most one out-edge per round after small-star),
-  * and convergence is O(log² n) rounds in the worst case, O(1)-ish on
-  * near-dup graphs (LSH clusters are near-cliques, so one large-star
-  * pass already stars most clusters).
+  * Algorithm, two phases:
+  *  1. Local contraction. Each partition of the pair set runs a
+  *     union-find on its executor (one typed `mapPartitions`, min-id
+  *     roots) and emits one (node, local min) edge per non-root node:
+  *     the partition's pairs arrive as min-rooted stars. Memory per
+  *     task is O(distinct nodes of the partition), held in one hash
+  *     map with no spill path — bounded by the partition size the
+  *     pair build chose, not by the pair set.
+  *  2. The alternating large-star / small-star method of Kiveris et
+  *     al., "Connected Components in MapReduce and Beyond" (SoCC
+  *     2014) — the published shuffle-native formulation (also what
+  *     GraphFrames ships) — over the contracted edges. Its rounds only
+  *     merge components that span partitions: a pair set held in one
+  *     partition is a star forest after phase 1 and runs zero rounds.
+  *     Each round is two self-joins on the CURRENT edge set; the edge
+  *     count never grows beyond the input pair count (each node keeps
+  *     at most one out-edge per round after small-star), and
+  *     convergence is O(log² n) rounds in the worst case.
   *
-  * 100 TB shape: every step is a bounded groupBy/join on the PAIR set
-  * (millions of rows when the corpus is billions — pairs are the
-  * near-dup survivors, not the corpus), never on the corpus itself.
-  * The driver loop only reads a 3-number aggregate per round — no
-  * edge data ever reaches the driver. Label assignment back onto the
-  * corpus is one broadcast-or-shuffle hash join.
+  * 100 TB shape: every step is a bounded per-partition pass or
+  * groupBy/join on the PAIR set (millions of rows when the corpus is
+  * billions — pairs are the near-dup survivors, not the corpus),
+  * never on the corpus itself. The driver loop only reads a 3-number
+  * aggregate per round — no edge data ever reaches the driver. Label
+  * assignment back onto the corpus is one broadcast-or-shuffle hash
+  * join.
   */
 object Clustering {
 
@@ -40,6 +53,10 @@ object Clustering {
     *
     * Nodes absent from `pairs` are absent here — callers left-join
     * and coalesce to the node's own id (see [[nearDupClusters]]).
+    *
+    * Ids must be integral (byte/short/int/long): the local pass reads
+    * them as `Long`, and `component` keeps the input id type. A pair
+    * with a null end is no edge.
     */
   def connectedComponents(
       pairs: DataFrame,
@@ -47,6 +64,11 @@ object Clustering {
       bCol: String = "doc_b",
       maxIter: Int = 25): DataFrame = {
     require(maxIter >= 1, "maxIter must be >= 1")
+    Seq(aCol, bCol).foreach { c =>
+      val t = pairs.schema(c).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"connectedComponents needs integral node ids; column $c is ${t.simpleString}")
+    }
     // checkpoint the (possibly expensive) pair pipeline ONCE; nodes
     // and the initial edge set both derive from the materialized copy
     // instead of re-running the upstream lineage.
@@ -55,8 +77,12 @@ object Clustering {
     val nodes = p0.select(col("a").as("n"))
       .unionByName(p0.select(col("b").as("n"))).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
+    val idType = nodes.schema("n").dataType
 
-    // canonical undirected edge set: (hi > lo), no self-loops.
+    // canonical undirected edge set: (hi > lo), no self-loops — each
+    // partition's pairs contracted to min-rooted stars by the local
+    // union-find; the distinct drops the (node, min) edges that
+    // several partitions emit alike.
     // Each round references the previous edge set twice, so the plan
     // lineage doubles per round — checkpoint every round to truncate
     // it (the standard iterative-DataFrame discipline; without it the
@@ -66,10 +92,13 @@ object Clustering {
     // rounds re-computable after executor loss.
     // non-eager: the star-forest probe below materializes the
     // checkpoint, so each round runs ONE job for checkpoint+test.
-    var edges = p0.select(
-        greatest(col("a"), col("b")).as("hi"),
-        least(col("a"), col("b")).as("lo"))
-      .filter(col("hi") =!= col("lo")).distinct()
+    import p0.sparkSession.implicits._
+    var edges = p0.filter(col("a").isNotNull && col("b").isNotNull)
+      .select(col("a").cast("long"), col("b").cast("long"))
+      .as[(Long, Long)]
+      .mapPartitions(localStars)
+      .select(col("_1").cast(idType).as("hi"), col("_2").cast(idType).as("lo"))
+      .distinct()
       .localCheckpoint(false)
 
     // Convergence = the edge set IS a min-rooted star forest, which is
@@ -133,6 +162,33 @@ object Clustering {
       .select(col("n").as("node"), coalesce(col("root"), col("n")).as("component"))
     nodes.unpersist()
     labels
+  }
+
+  /** One partition's pairs as min-rooted stars: a union-find whose
+    * union keeps the smaller root, so every root is its local
+    * component's minimum, then one (node, root) edge per non-root
+    * node — hi > lo, never a self-loop. State is one map entry per
+    * distinct node of the partition. */
+  private def localStars(pairs: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x // path compression
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      if (a != b) {
+        parent.getOrElseUpdate(a, a)
+        parent.getOrElseUpdate(b, b)
+        val (ra, rb) = (find(a), find(b))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+    }
+    // find only rewrites values of existing keys: the map never
+    // rehashes under this iterator
+    parent.keysIterator.map(n => (n, find(n))).filter { case (n, r) => n != r }
   }
 
   /** Per-document near-dup cluster assignment over the MinHash+LSH

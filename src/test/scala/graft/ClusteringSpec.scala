@@ -23,9 +23,24 @@ class ClusteringSpec extends SparkSpec with TableDrivenPropertyChecks {
     nodes.map(n => n -> find(n)).toMap
   }
 
-  private def cc(pairs: Seq[(Long, Long)]): Map[Long, Long] =
-    Clustering.connectedComponents(pairs.toDF("doc_a", "doc_b"))
+  /** Labels of `pairs`, spread over `n` partitions first when given:
+    * the local union-find contracts each partition on its own, and
+    * the star rounds merge what spans partitions. */
+  private def cc(pairs: Seq[(Long, Long)], n: Option[Int] = None): Map[Long, Long] = {
+    val df = pairs.toDF("doc_a", "doc_b")
+    Clustering.connectedComponents(n.fold(df)(k => df.repartition(k)))
       .as[(Long, Long)].collect().toMap
+  }
+
+  /** Labels equal union-find in the default layout and at 1, 3 and 8
+    * partitions (the 19-edge chain at 8 leaves links between
+    * partitions, so the distributed rounds run). */
+  private def assertLayoutInvariant(pairs: Seq[(Long, Long)]): Unit = {
+    val want = unionFind(pairs)
+    Seq(None, Some(1), Some(3), Some(8)).foreach { n =>
+      assert(cc(pairs, n) == want, s"partitions: ${n.getOrElse("default")}")
+    }
+  }
 
   test("connectedComponents matches union-find on assorted graph shapes") {
     val graphs = Table(
@@ -40,7 +55,7 @@ class ClusteringSpec extends SparkSpec with TableDrivenPropertyChecks {
       Seq((8L, 4L), (4L, 2L), (2L, 1L), (8L, 12L), (12L, 14L), (100L, 50L))
     )
     forAll(graphs) { pairs =>
-      assert(cc(pairs) == unionFind(pairs))
+      assertLayoutInvariant(pairs)
     }
   }
 
@@ -49,12 +64,30 @@ class ClusteringSpec extends SparkSpec with TableDrivenPropertyChecks {
     (0 until 3).foreach { _ =>
       val pairs = Seq.fill(60)((rnd.nextLong(40).abs, rnd.nextLong(40).abs))
         .filter(p => p._1 != p._2)
-      assert(cc(pairs) == unionFind(pairs))
+      assertLayoutInvariant(pairs)
     }
   }
 
   test("connectedComponents of an empty pair set is empty") {
     assert(cc(Seq.empty) == Map.empty)
+  }
+
+  test("connectedComponents on Int ids: same labels, component stays int") {
+    val pairs = Seq((5L, 3L), (3L, 9L), (10L, 20L), (7L, 7L), (9L, 5L), (21L, 20L))
+    val out = Clustering.connectedComponents(
+      pairs.map { case (a, b) => (a.toInt, b.toInt) }.toDF("doc_a", "doc_b"))
+    assert(out.schema("component").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(out.as[(Int, Int)].collect().map { case (n, c) => n.toLong -> c.toLong }.toMap ==
+      unionFind(pairs))
+  }
+
+  test("connectedComponents rejects non-integral ids") {
+    val pairs = Seq(("1", "2"), ("2", "3")).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalArgumentException] {
+      Clustering.connectedComponents(pairs)
+    }
+    assert(e.getMessage.contains("integral node ids"), e.getMessage)
+    assert(e.getMessage.contains("doc_a"), e.getMessage)
   }
 
   test("nearDupClusters: exact dups cluster; canonical is the longest text") {

@@ -34,6 +34,57 @@ class SharedSpec extends SparkSpec {
     Shared.invalidate(spark) // leave no fixture entries behind
   }
 
+  test("memo builds different keys concurrently and one key once") {
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      // each build waits until the OTHER key's build has started: a
+      // lock held across builds would keep the second build from
+      // starting until the first one's await timed out
+      val started = Map("sharedspec_a" -> new CountDownLatch(1),
+        "sharedspec_b" -> new CountDownLatch(1))
+      def build(key: String, other: String): Boolean = {
+        var overlapped = false
+        Shared.memo(spark, key) {
+          started(key).countDown()
+          overlapped = started(other).await(30, TimeUnit.SECONDS)
+          Seq((1L, key)).toDF("k", "v")
+        }
+        overlapped
+      }
+      val both = Future.sequence(Seq(
+        Future(build("sharedspec_a", "sharedspec_b")),
+        Future(build("sharedspec_b", "sharedspec_a"))))
+      assert(Await.result(both, 60.seconds) == Seq(true, true),
+        "each key's build must run while the other's is in progress")
+
+      // the same key from two threads: one build, and both callers
+      // get the built artifact
+      val builds = new AtomicInteger(0)
+      val inBuild = new CountDownLatch(1)
+      def same(): Seq[String] =
+        Shared.memo(spark, "sharedspec_same") {
+          builds.incrementAndGet()
+          inBuild.countDown()
+          Thread.sleep(500) // hold the build open while the other caller arrives
+          Seq((1L, "x")).toDF("k", "v")
+        }.collect().map(_.toString).toSeq
+      val first = Future(same())
+      inBuild.await(30, TimeUnit.SECONDS)
+      val second = Future(same())
+      val got = Await.result(Future.sequence(Seq(first, second)), 60.seconds)
+      assert(builds.get == 1, "one key must build once")
+      assert(got == Seq(Seq("[1,x]"), Seq("[1,x]")))
+    } finally {
+      pool.shutdown()
+      Shared.invalidate(spark)
+    }
+  }
+
   test("family queries survive invalidate + rebuild with identical answers") {
     // q200 (publishes the Z-order cell artifact) and q42 (aggregates
     // the near-dup cluster artifact): run, kill the session's
