@@ -71,10 +71,6 @@ object AdAnalytics {
       .filter(col("click_count") >= threshold)
       .select(col("user_id")).distinct()
 
-  /** J9: drop blacklisted users from the click stream. */
-  def filterBlacklisted(adClicks: DataFrame, black: DataFrame): DataFrame =
-    adClicks.join(black, Seq("user_id"), "left_anti")
-
   /** T5: totals per (day, province, city, ad). One shuffle; partial
     * aggregation map-side. In streaming this runs as an update-mode
     * stateful aggregation with identical grouping. */

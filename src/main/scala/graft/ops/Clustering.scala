@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable
 
@@ -30,8 +29,10 @@ import scala.collection.mutable
   *     al., "Connected Components in MapReduce and Beyond" (SoCC
   *     2014) — the published shuffle-native formulation (also what
   *     GraphFrames ships) — over the contracted edges. Its rounds only
-  *     merge components that span partitions: a pair set held in one
-  *     partition is a star forest after phase 1 and runs zero rounds.
+  *     merge components that span partitions. A pair set held in at
+  *     most one partition skips phase 2 whole: phase 1 has seen every
+  *     edge, so its stars are the answer — no distinct, no star-forest
+  *     probe, no rounds.
   *     Each round is two self-joins on the CURRENT edge set; the edge
   *     count never grows beyond the input pair count (each node keeps
   *     at most one out-edge per round after small-star), and
@@ -76,8 +77,12 @@ object Clustering {
       .localCheckpoint(false)
     val nodes = p0.select(col("a").as("n"))
       .unionByName(p0.select(col("b").as("n"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val idType = nodes.schema("n").dataType
+
+    // The checkpoint's partitions are already computed: reading their
+    // count runs no job. At most one partition means the local
+    // union-find sees every edge and emits each non-root node once.
+    val onePartition = p0.queryExecution.toRdd.getNumPartitions <= 1
 
     // canonical undirected edge set: (hi > lo), no self-loops — each
     // partition's pairs contracted to min-rooted stars by the local
@@ -91,14 +96,15 @@ object Clustering {
     // a configured checkpoint dir, swap for Dataset.checkpoint to make
     // rounds re-computable after executor loss.
     // non-eager: the star-forest probe below materializes the
-    // checkpoint, so each round runs ONE job for checkpoint+test.
+    // checkpoint, so each round runs ONE job for checkpoint+test (one
+    // partition has no probe: the labels job materializes it).
     import p0.sparkSession.implicits._
-    var edges = p0.filter(col("a").isNotNull && col("b").isNotNull)
+    val stars = p0.filter(col("a").isNotNull && col("b").isNotNull)
       .select(col("a").cast("long"), col("b").cast("long"))
       .as[(Long, Long)]
       .mapPartitions(localStars)
       .select(col("_1").cast(idType).as("hi"), col("_2").cast(idType).as("lo"))
-      .distinct()
+    var edges = (if (onePartition) stars else stars.distinct())
       .localCheckpoint(false)
 
     // Convergence = the edge set IS a min-rooted star forest, which is
@@ -121,7 +127,9 @@ object Clustering {
       s.getLong(0) == 0L || (s.getLong(1) == 0L && s.getLong(0) == s.getLong(2))
     }
 
-    var converged = isStarForest(edges)
+    // one partition's stars are the final star forest: the probe
+    // could only answer yes
+    var converged = onePartition || isStarForest(edges)
     var iter = 0
 
     while (!converged && iter < maxIter) {
@@ -157,11 +165,9 @@ object Clustering {
 
     // star forest: every non-root points at its component min; roots
     // appear only on the lo side.
-    val labels = nodes
+    nodes
       .join(edges.select(col("hi").as("n"), col("lo").as("root")), Seq("n"), "left")
       .select(col("n").as("node"), coalesce(col("root"), col("n")).as("component"))
-    nodes.unpersist()
-    labels
   }
 
   /** One partition's pairs as min-rooted stars: a union-find whose

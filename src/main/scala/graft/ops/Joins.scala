@@ -24,12 +24,6 @@ object Joins {
   def anti(left: DataFrame, blacklist: DataFrame, on: Seq[String]): DataFrame =
     left.join(blacklist, on, "left_anti")
 
-  /** J5: universe ⟕ counts with default 0 (reference chained three
-    * leftOuterJoins with Optional-default; one call each here). */
-  def leftFillZero(universe: DataFrame, counts: DataFrame, on: Seq[String],
-      fillCols: Seq[String]): DataFrame =
-    universe.join(counts, on, "left").na.fill(0L, fillCols)
-
   /** Bloom runtime-filter audit — the row-level sibling of q279's
     * per-FILE bloom pruning, and the shape behind every engine's
     * runtime filter / DPP: instead of shuffling the fact table into a

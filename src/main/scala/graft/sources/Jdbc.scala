@@ -9,8 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Reference: `city_info` loaded via `format("jdbc")`
   * (AreaTop3ProductSpark.java:176-218) and result tables written by
   * hand-rolled per-partition DAO batches. Spark-first both ways: the
-  * built-in JDBC source (predicate pushdown into the remote DB,
-  * partitioned reads via `partitionColumn` for big tables) and
+  * built-in JDBC source (predicate pushdown into the remote DB) and
   * `df.write.jdbc` (batched executor-side inserts). Streaming upsert
   * semantics live in graft.sink.KeyedStore instead (§1.3).
   */
@@ -26,15 +25,6 @@ object Jdbc {
   def read(spark: SparkSession, url: String, table: String,
       options: Map[String, String] = Map.empty): DataFrame =
     spark.read.jdbc(url, table, props(options))
-
-  /** Fact-scale partitioned read: `numPartitions` concurrent range
-    * scans on `partitionColumn` — how a 100 TB engine would ingest a
-    * big JDBC-fronted table without a single-connection bottleneck. */
-  def readPartitioned(spark: SparkSession, url: String, table: String,
-      partitionColumn: String, lower: Long, upper: Long, numPartitions: Int,
-      options: Map[String, String] = Map.empty): DataFrame =
-    spark.read.jdbc(url, table, partitionColumn, lower, upper, numPartitions,
-      props(options))
 
   /** Batch append sink (S9's insert tables): executor-side batched
     * INSERTs, `batchsize` rows per round trip. */

@@ -66,10 +66,4 @@ object Tables {
         df.withColumn("ts", col("ts").cast(TimestampType))
       case _ => df
     }
-
-  /** S6/S7 analog: register every table as a temp view so SQL-text
-    * entry points (`spark.sql`) resolve the same names the DuckDB
-    * oracle uses. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 }

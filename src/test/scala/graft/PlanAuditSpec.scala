@@ -1,5 +1,12 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.window.WindowExecBase
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, row_number}
+
 /** Physical-plan audits: the scale properties the operators were
   * designed around, pinned as assertions so a refactor that silently
   * adds a shuffle, drops a pushed filter, widens a scan, or loses a
@@ -12,8 +19,21 @@ package graft
   */
 class PlanAuditSpec extends SparkSpec {
 
-  private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+  private def executed(name: String): SparkPlan =
+    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
+
+  private def plan(name: String): String = executed(name).toString
+
+  /** Every node of `p`: its children and subqueries, the current plan
+    * under an adaptive root, and the plan a cached scan reads. */
+  private def physicalNodes(p: SparkPlan): Iterator[SparkPlan] = {
+    val inner = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case c: InMemoryTableScanExec => Seq(c.relation.cachedPlan)
+      case _ => Nil
+    }
+    Iterator(p) ++ (p.children ++ p.subqueries ++ inner).iterator.flatMap(physicalNodes)
+  }
 
   /** Drop the cached-lineage subtrees (lines printed under an
     * InMemoryRelation) so shuffle counts see only the LIVE plan — the
@@ -44,16 +64,21 @@ class PlanAuditSpec extends SparkSpec {
       .findAllIn(stripCached(p)).length
 
   /** The r10-verdict scale-safety pin for scalar reattachment: no
-    * no-partitionBy window anywhere (its windowspecdefinition starts
-    * directly with the frame — it would plan Exchange SinglePartition
-    * + a one-task sort over the WHOLE grain frame), and every
+    * window without a partitionBy anywhere, ordered or not, cached
+    * lineage included (it would plan Exchange SinglePartition + a
+    * one-task sort over the WHOLE grain frame), and every
     * Exchange SinglePartition that does appear feeds a final
     * HashAggregate from partial-aggregate rows (~1 row per upstream
     * partition — the parallel tree-reduce shape), never raw rows into
     * a Sort/Window. */
-  private def assertScalarAggOnly(p: String): Unit = {
-    assert(!p.contains("windowspecdefinition(specifiedwindowframe"),
-      s"no-partitionBy window (single-task sort of the whole frame):\n$p")
+  private def assertScalarAggOnly(ep: SparkPlan): Unit = {
+    val p = ep.toString
+    physicalNodes(ep).foreach {
+      case w: WindowExecBase =>
+        assert(w.partitionSpec.nonEmpty,
+          s"no-partitionBy window (single-task sort of the whole frame):\n$w\n$p")
+      case _ =>
+    }
     val lines = p.split("\n")
     lines.zipWithIndex.foreach { case (line, i) =>
       if (line.contains("Exchange SinglePartition")) {
@@ -1029,8 +1054,30 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p)
   }
 
+  test("assertScalarAggOnly rejects an ordered global window, live or cached") {
+    // one input partition: the window needs no Exchange SinglePartition,
+    // so only the plan walk can see it
+    def frame = spark.range(0, 20, 1, 1).select(col("id").as("x"), (col("id") % 3).as("g"))
+    val ranked = frame.withColumn("rn", row_number().over(Window.orderBy(col("x"))))
+    intercept[org.scalatest.exceptions.TestFailedException] {
+      assertScalarAggOnly(ranked.queryExecution.executedPlan)
+    }
+    ranked.persist()
+    try {
+      val overCache = ranked.groupBy(col("g")).count().queryExecution.executedPlan
+      assert(physicalNodes(overCache).exists(_.isInstanceOf[InMemoryTableScanExec]))
+      intercept[org.scalatest.exceptions.TestFailedException] {
+        assertScalarAggOnly(overCache)
+      }
+    } finally ranked.unpersist()
+    assertScalarAggOnly(frame
+      .withColumn("rn", row_number().over(Window.partitionBy(col("g")).orderBy(col("x"))))
+      .queryExecution.executedPlan)
+  }
+
   test("q179 top supplier: ship-date pushed; ONE cached fact scan; scalar max is a parallel agg + broadcast") {
-    val p = plan("q179_top_supplier")
+    val ep = executed("q179_top_supplier")
+    val p = ep.toString
     assert(p.contains("GreaterThanOrEqual(l_shipdate"),
       s"window not pushed to the lineitem scan:\n$p")
     assert(!p.contains("CartesianProduct"),
@@ -1042,7 +1089,7 @@ class PlanAuditSpec extends SparkSpec {
     assert("Scan parquet".r.findAllIn(stripCached(p)).length <= 1,
       s"expected only the supplier dim scan live:\n$p")
     assert(p.contains("InMemoryTableScan"), p)
-    assertScalarAggOnly(p)
+    assertScalarAggOnly(ep)
   }
 
   test("q180 small qty revenue: part-average window rides ONE l_partkey shuffle of ONE pruned scan") {
@@ -2121,7 +2168,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q318 croston: cached part grain; one partkey shuffle; span is a parallel agg + broadcast") {
-    val p = plan("q318_croston_demand")
+    val ep = executed("q318_croston_demand")
+    val p = ep.toString
     assert(!p.contains("CartesianProduct"), p)
     assert("Scan parquet".r.findAllIn(stripCached(p)).length <= 1, p)
     assert("Exchange hashpartitioning\\(partkey".r
@@ -2129,7 +2177,7 @@ class PlanAuditSpec extends SparkSpec {
     // the span scalar must never come back as a no-partitionBy window
     // (Exchange SinglePartition over the whole part grain)
     assert(p.contains("InMemoryTableScan"), p)
-    assertScalarAggOnly(p)
+    assertScalarAggOnly(ep)
   }
 
   test("q319 fd audit: six pruned two-column scans; cell→key→report aggregate ladder") {
@@ -2267,14 +2315,15 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q323 newsvendor: cached (part,week) grain; no dense spine; span is a parallel agg + broadcast") {
-    val p = plan("q323_newsvendor_stock")
+    val ep = executed("q323_newsvendor_stock")
+    val p = ep.toString
     assert(!p.contains("CartesianProduct"), p)
     assert("Scan parquet".r.findAllIn(stripCached(p)).length <= 1, p)
     assert("Exchange hashpartitioning\\(partkey".r
       .findAllIn(stripCached(p)).length <= 2, p)
     // the week-span scalar must never come back as a no-partitionBy
     // window (Exchange SinglePartition over the whole part grain)
-    assertScalarAggOnly(p)
+    assertScalarAggOnly(ep)
   }
 
   test("q334 changepoint: rides the shared day panel; the argmax runs on the day spine") {
