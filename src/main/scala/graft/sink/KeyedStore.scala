@@ -3,6 +3,9 @@ package graft.sink
 import java.sql.{Connection, DriverManager}
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Row}
+
 /** Keyed result store — the §1.3 sink surface of the reference
   * (MySQL tables written by hand-rolled DAOs). One value model covers
   * all five ad tables: a string key tuple and a long count.
@@ -38,6 +41,115 @@ trait KeyedStore extends AutoCloseable {
     * (the in-memory test store is not transactional — documented). */
   def txBegin(): Unit = ()
   def txCommit(): Unit = ()
+}
+
+/** The store-writer protocol: every streaming foreachBatch body ships
+  * its micro-batch frame into a store through exactly one of these
+  * three helpers, picked by what a replayed batch would do to the
+  * store. All three write executor-side, one store handle per
+  * partition (T9); the driver only coordinates.
+  *
+  *  - [[perPartition]]: idempotent writes (absolute puts, group
+  *    replaces) — a replay rewrites the same values, so no
+  *    transaction and no ledger.
+  *  - [[singleWriter]]: absolute state plus a derived rebuild over
+  *    the whole (bounded) table — idempotent, but the puts and the
+  *    rebuild must land together, so the batch is one transaction.
+  *  - [[exactlyOnce]]: non-idempotent increments, guarded by the
+  *    [[Ledger]].
+  */
+object KeyedStore {
+
+  /** Idempotence ledger for non-idempotent (increment) writes. Keys
+    * are (query, scope) where scope is `"batch"` for the batch-grain
+    * fast-skip marker or `"p<partitionId>"` for the per-partition
+    * ledger; values are `appliedBatchId + 1` (ledger rows are created
+    * at 0 by the create-or-lock increment, so 0 must mean "nothing
+    * applied" — batch ids start at 0). foreachBatch may re-deliver a
+    * batch after a failure, and each PARTITION applies its increments
+    * atomically with its ledger row in one store transaction — so a
+    * replayed batch re-applies exactly the partitions that did not
+    * commit, and nothing twice. Provision this table with the result
+    * tables when backing the sink with a real database. */
+  val Ledger = "graft_applied_batch"
+
+  /** Idempotent writes: `write` each row through one store handle per
+    * partition, with no transaction. */
+  def perPartition(df: DataFrame, provider: StoreProvider)(
+      write: (KeyedStore, Row) => Unit): Unit =
+    df.foreachPartition { (rows: Iterator[Row]) =>
+      val store = provider.open()
+      try rows.foreach(r => write(store, r))
+      finally store.close()
+    }
+
+  /** Absolute-state writes: the whole batch in one partition and one
+    * transaction; an empty batch opens no store. The narrowing is a
+    * `repartition(1)`, not a `coalesce(1)`: on a frame that ends in a
+    * stateful operator, a coalesce would pull every state partition
+    * into one task, where the shuffle only moves its output. */
+  def singleWriter(df: DataFrame, provider: StoreProvider)(
+      write: (KeyedStore, Iterator[Row]) => Unit): Unit =
+    df.repartition(1).foreachPartition { (rows: Iterator[Row]) =>
+      if (rows.hasNext) {
+        val s = provider.open()
+        try { s.txBegin(); write(s, rows); s.txCommit() }
+        finally s.close()
+      }
+    }
+
+  /** Non-idempotent writes, exactly once per (query, batchId) under
+    * foreachBatch replay, whole batch or a single failed task:
+    *
+    *  1. Batch-grain pre-check: a batch below `(query, "batch")` was
+    *     applied in full and returns before `df` — passed by name —
+    *     is even built, so a skipped batch computes nothing.
+    *  1. `repartition(parts, keys*)`: partition identity is
+    *     replay-stable BY CONSTRUCTION, not by config — a
+    *     REPARTITION_BY_NUM shuffle that AQE never coalesces, with a
+    *     fixed partition count and Spark's deterministic hash
+    *     partitioning, so a key maps to the same partition id in every
+    *     attempt of every replay. (Relying on an aggregation's own
+    *     output partitions would break: AQE coalesces those by runtime
+    *     size, which can shift after a partial apply.) `parts` is part
+    *     of the ledger's on-disk contract: changing it invalidates
+    *     in-flight `p<pid>` rows, so drain the stream first.
+    *  1. Per non-empty partition, in one transaction: create-or-lock
+    *     the `(query, "p<pid>")` row (an increment of 0 — a row-level
+    *     write lock on any real database), THEN read it, and run
+    *     `write` only if it is at most `batchId`; then record
+    *     `batchId + 1`. Concurrent attempts of the same partition
+    *     (speculative execution, a zombie task overlapping its retry)
+    *     serialize on the row lock: the second sees the first's
+    *     batchId and skips.
+    *  1. After the job, mark `(query, "batch")`: a clean replay then
+    *     skips at step 1. */
+  def exactlyOnce(provider: StoreProvider, query: String, batchId: Long,
+      parts: Int, keys: Column*)(df: => DataFrame)(
+      write: (KeyedStore, Iterator[Row]) => Unit): Unit = {
+    val s0 = provider.open()
+    val applied = try s0.get(Ledger, Seq(query, "batch")).getOrElse(0L)
+    finally s0.close()
+    if (batchId < applied) return
+    df.repartition(parts, keys: _*).foreachPartition { (rows: Iterator[Row]) =>
+      if (rows.hasNext) {
+        val lkey = Seq(query, s"p${TaskContext.getPartitionId()}")
+        val s = provider.open()
+        try {
+          s.txBegin()
+          s.increment(Ledger, lkey, 0L)
+          if (s.get(Ledger, lkey).getOrElse(0L) <= batchId) {
+            write(s, rows)
+            s.put(Ledger, lkey, batchId + 1)
+          }
+          s.txCommit()
+        } finally s.close()
+      }
+    }
+    val s2 = provider.open()
+    try s2.put(Ledger, Seq(query, "batch"), batchId + 1)
+    finally s2.close()
+  }
 }
 
 /** Executor-side connection factory (the reference's pooled
@@ -111,6 +223,8 @@ final case class InMemoryProvider(name: String) extends StoreProvider {
 final class JdbcStore(conn: Connection) extends KeyedStore {
 
   private def where(n: Int) = (1 to n).map(i => s"k$i = ?").mkString(" AND ")
+  /** The filter on a key prefix; an empty prefix is the whole table. */
+  private def wherePrefix(n: Int) = if (n == 0) "" else s" WHERE ${where(n)}"
   private def setKeys(st: java.sql.PreparedStatement, key: Seq[String], from: Int = 1): Unit =
     key.zipWithIndex.foreach { case (k, i) => st.setString(from + i, k) }
 
@@ -169,7 +283,7 @@ final class JdbcStore(conn: Connection) extends KeyedStore {
   def replaceGroup(table: String, groupPrefix: Seq[String],
       rows: Seq[(Seq[String], Long)]): Unit = {
     val st = conn.prepareStatement(
-      s"DELETE FROM $table WHERE ${where(groupPrefix.size)}")
+      s"DELETE FROM $table${wherePrefix(groupPrefix.size)}")
     try { setKeys(st, groupPrefix); st.executeUpdate() } finally st.close()
     rows.foreach { case (k, v) => insert(table, k, v) }
   }
@@ -189,7 +303,7 @@ final class JdbcStore(conn: Connection) extends KeyedStore {
   override def scanPrefix(table: String,
       prefix: Seq[String]): Seq[(List[String], Long)] = {
     val st = conn.prepareStatement(
-      s"SELECT * FROM $table WHERE ${where(prefix.size)}")
+      s"SELECT * FROM $table${wherePrefix(prefix.size)}")
     try {
       setKeys(st, prefix)
       val rs = st.executeQuery()
@@ -202,7 +316,7 @@ final class JdbcStore(conn: Connection) extends KeyedStore {
   }
 
   /** READ COMMITTED is part of the transaction contract: the
-    * lock-then-check idempotence protocol (AdClickStream) relies on a
+    * lock-then-check idempotence protocol ([[KeyedStore.exactlyOnce]]) relies on a
     * plain SELECT after a row lock seeing the LATEST committed value.
     * Under MySQL's default REPEATABLE READ that read is a stale
     * snapshot established at transaction start — a zombie attempt

@@ -71,9 +71,8 @@ object AdClickStream {
     * 5-second micro-batches (T1) via this default trigger. */
   val DefaultTrigger: Trigger = Trigger.ProcessingTime("5 seconds")
 
-  /** Result tables plus the idempotence ledger (`k1` = query name,
-    * `k2` = "batch" or "p&lt;partitionId&gt;", `v` = applied batchId
-    * + 1 — see AppliedMarker) — provision ALL of these when backing
+  /** Result tables plus the idempotence ledger
+    * ([[KeyedStore.Ledger]]) — provision ALL of these when backing
     * the sink with a real database. Upgrade note: the ledger table
     * and its key/value encoding changed in round 4 (was
     * `__applied_batch__` with a single-key batch marker — a name a
@@ -82,52 +81,10 @@ object AdClickStream {
     * before switching, or the first post-upgrade batch re-applies. */
   val Tables: Seq[String] = Seq(
     "ad_user_click_count", "ad_blacklist", "ad_stat",
-    "ad_province_top3", "ad_click_trend", "graft_applied_batch")
+    "ad_province_top3", "ad_click_trend", KeyedStore.Ledger)
 
-  /** T9: executor-side batched writes — one store connection per
-    * partition, like the reference's pooled foreachPartition DAOs.
-    * Shared with the other idempotent-sink streams (TrendStream). */
-  private[streaming] def writePerPartition(df: DataFrame, provider: StoreProvider)(
-      write: (graft.sink.KeyedStore, Row) => Unit): Unit =
-    df.foreachPartition { (rows: Iterator[Row]) =>
-      val store = provider.open()
-      try rows.foreach(r => write(store, r))
-      finally store.close()
-    }
-
-  /** Idempotence ledger for non-idempotent (increment) writes. Keys
-    * are (query, scope) where scope is `"batch"` for the batch-grain
-    * fast-skip marker or `"p<partitionId>"` for the per-partition
-    * ledger; values are `appliedBatchId + 1` (ledger rows are created
-    * at 0 by the create-or-lock increment, so 0 must mean "nothing
-    * applied" — batch ids start at 0). foreachBatch may re-deliver a
-    * batch after a failure, and each PARTITION applies its increments
-    * atomically with its ledger row in one store transaction — so a
-    * replayed batch re-applies exactly the partitions that did not
-    * commit, and nothing twice.
-    *
-    * Partition identity is replay-stable BY CONSTRUCTION, not by
-    * config: the count frame is explicitly
-    * `repartition(LedgerParts, keys)` — a REPARTITION_BY_NUM shuffle
-    * that AQE never coalesces, with a fixed partition count and
-    * Spark's deterministic hash partitioning — so a key maps to the
-    * same partition id in every attempt of every replay. (Relying on
-    * the aggregation's own output partitions would break: AQE
-    * coalesces those by runtime size, which can shift after a partial
-    * apply.)
-    *
-    * Concurrent attempts of the SAME partition (speculative
-    * execution, zombie task overlapping its retry) are serialized by
-    * a lock-then-check INSIDE the transaction: the ledger row is
-    * created-or-locked (increment of 0 → a row-level write lock on
-    * any real database), then read — the second attempt blocks on the
-    * row lock until the first commits and then sees its batchId and
-    * skips. */
-  private val AppliedMarker = "graft_applied_batch"
-
-  /** Fixed partition count of the T4 apply stage (see AppliedMarker):
-    * part of the ledger's on-disk contract — changing it invalidates
-    * in-flight per-partition ledger rows, so drain the stream first. */
+  /** Fixed partition count of the T4 apply stage: the `parts` of its
+    * [[KeyedStore.exactlyOnce]] ledger. */
   val LedgerParts = 32
 
   /** One-partition RDD whose compute() reads the store's blacklist AT
@@ -159,79 +116,42 @@ object AdClickStream {
       StructType(Seq(StructField("user_id", LongType))))
 
   /** The J9+T4 micro-batch body (exposed for tests) — fully
-    * distributed: NO driver-side collect anywhere on the path.
-    *
-    * The event-grain work (parse, blacklist anti-join, counting) runs
-    * distributed as before; the (day, user, ad) count frame now ALSO
-    * applies executor-side, per partition. Increments are NOT
-    * idempotent, so each partition commits its increments atomically
-    * WITH its (query, partition) ledger row: on replay — whole batch
-    * or a single failed task — a partition whose ledger row already
-    * carries this batchId skips, so nothing double-counts and a
-    * half-applied partition (crash before commit) rolls back. The
-    * count frame has ONE row per key (it is the batch aggregate), so
-    * the threshold read-back right after a key's increment sees the
-    * key's full post-batch total — same verdicts as the old two-pass
-    * driver transaction. A batch-grain marker written after all
-    * partitions commit makes clean replays skip without recompute.
-    * (T5/T6 live in `adStatQuery`, whose absolute-total puts are
-    * idempotent without any ledger; the trend query likewise.) */
+    * distributed: NO driver-side collect anywhere on the path. The
+    * (day, user, ad) count frame applies executor-side under
+    * [[KeyedStore.exactlyOnce]], keyed by its own key columns. It has
+    * ONE row per key (it is the batch aggregate), so the threshold
+    * read-back right after a key's increment sees the key's full
+    * post-batch total. (T5/T6 live in `adStatQuery`, whose
+    * absolute-total puts are idempotent without any ledger; the trend
+    * query likewise.) */
   def statsBatch(provider: StoreProvider, threshold: Long)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val store = provider.open()
-    val lastApplied = try store.get(AppliedMarker, Seq("stats", "batch")).getOrElse(0L)
-    finally store.close()
-    if (batchId < lastApplied) return // cleanly applied batch — skip
-
-    // J9: anti-join against the *current* blacklist (per-batch
-    // freshness, matching the reference's per-batch MySQL re-read).
-    // Replay nuance: a user blacklisted by a partition that committed
-    // before the crash is anti-joined away on replay, so their
-    // residual counts in never-committed partitions are not applied —
-    // benign, because a blacklisted user's counts only existed to
-    // trigger the blacklisting (the reference has the same one-batch
-    // exclusion lag).
-    val black = blacklistFrame(batch.sparkSession, provider)
-    val clicks = batch.join(broadcast(black), Seq("user_id"), "left_anti")
-    AdAnalytics.clickCounts(clicks)
-      // fixed-count keyed repartition = replay-stable partition ids
-      // (see AppliedMarker scaladoc)
-      .repartition(LedgerParts, col("dt"), col("user_id"), col("ad_id"))
-      .foreachPartition { (rows: Iterator[Row]) =>
-        if (rows.hasNext) { // empty partitions need no ledger row
-          val pid = TaskContext.getPartitionId()
-          val lkey = Seq("stats", s"p$pid")
-          val s = provider.open()
-          try {
-            s.txBegin()
-            // create-or-lock the ledger row, THEN check it — inside
-            // the transaction, so a concurrent attempt of the same
-            // partition blocks on the row lock instead of racing
-            s.increment(AppliedMarker, lkey, 0L)
-            if (s.get(AppliedMarker, lkey).getOrElse(0L) <= batchId) {
-              rows.foreach { r =>
-                // T4: per-(day,user,ad) totals, then the threshold
-                // read-back on just-incremented keys only — only a key
-                // incremented this batch can newly cross the threshold,
-                // and earlier offenders are already blacklisted. Point
-                // lookups are the reference's own T4 shape (:502-504);
-                // insertKey dedups (A8).
-                val key = Seq(r.getString(0), r.getLong(1).toString, r.getLong(2).toString)
-                s.increment("ad_user_click_count", key, r.getLong(3))
-                if (s.get("ad_user_click_count", key).exists(_ >= threshold))
-                  s.insertKey("ad_blacklist", Seq(key(1)))
-              }
-              s.put(AppliedMarker, lkey, batchId + 1)
-            }
-            s.txCommit()
-          } finally s.close()
-        }
+      batch: DataFrame, batchId: Long): Unit =
+    KeyedStore.exactlyOnce(provider, "stats", batchId, LedgerParts,
+        col("dt"), col("user_id"), col("ad_id")) {
+      // J9: anti-join against the *current* blacklist (per-batch
+      // freshness, matching the reference's per-batch MySQL re-read).
+      // Replay nuance: a user blacklisted by a partition that committed
+      // before the crash is anti-joined away on replay, so their
+      // residual counts in never-committed partitions are not applied —
+      // benign, because a blacklisted user's counts only existed to
+      // trigger the blacklisting (the reference has the same one-batch
+      // exclusion lag).
+      val black = blacklistFrame(batch.sparkSession, provider)
+      AdAnalytics.clickCounts(
+        batch.join(broadcast(black), Seq("user_id"), "left_anti"))
+    } { (s, rows) =>
+      rows.foreach { r =>
+        // T4: per-(day,user,ad) totals, then the threshold read-back on
+        // just-incremented keys only — only a key incremented this
+        // batch can newly cross the threshold, and earlier offenders
+        // are already blacklisted. Point lookups are the reference's
+        // own T4 shape (:502-504); insertKey dedups (A8).
+        val key = Seq(r.getString(0), r.getLong(1).toString, r.getLong(2).toString)
+        s.increment("ad_user_click_count", key, r.getLong(3))
+        if (s.get("ad_user_click_count", key).exists(_ >= threshold))
+          s.insertKey("ad_blacklist", Seq(key(1)))
       }
-    // all partitions committed — record the batch-grain fast path
-    val s2 = provider.open()
-    try s2.put(AppliedMarker, Seq("stats", "batch"), batchId + 1)
-    finally s2.close()
-  }
+    }
 
   /** The parsed clicks of `lines`, read at most as many partitions
     * wide as there are cores (see "Source fan-out" above). */
@@ -262,7 +182,7 @@ object AdClickStream {
     batch.persist()
     try {
       // T5: absolute totals per (day, province, city, ad).
-      writePerPartition(batch, provider) { (s, r) =>
+      KeyedStore.perPartition(batch, provider) { (s, r) =>
         s.put("ad_stat",
           Seq(r.getString(0), r.getString(1), r.getString(2), r.getLong(3).toString),
           r.getLong(4))
@@ -273,7 +193,7 @@ object AdClickStream {
       // ranking (sum over cities, count desc, ad asc, take 3) is the
       // same provinceTopFromStats contract the batch oracle checks.
       val touched = batch.select(col("dt"), col("province")).distinct()
-      writePerPartition(touched, provider) { (s, r) =>
+      KeyedStore.perPartition(touched, provider) { (s, r) =>
         val (dt, prov) = (r.getString(0), r.getString(1))
         val perAd = s.scanPrefix("ad_stat", Seq(dt, prov))
           .groupBy(_._1(3)).map { case (ad, rows) => (ad, rows.map(_._2).sum) }
@@ -337,7 +257,7 @@ object AdClickStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        writePerPartition(batch, provider) { (s, r) =>
+        KeyedStore.perPartition(batch, provider) { (s, r) =>
           s.put("ad_click_trend",
             Seq(r.getString(0), r.getLong(1).toString), r.getLong(2))
         }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming volume-anomaly monitor — the ingestion-time twin of the
   * q88 batch report ([[graft.ops.Retention.volumeAnomaly]]): flag a
@@ -66,7 +66,7 @@ object AnomalyStream {
     validate(windowDays, k2, minObs)
     batch.persist()
     try {
-      AdClickStream.writePerPartition(batch, provider) { (s, r) =>
+      KeyedStore.perPartition(batch, provider) { (s, r) =>
         s.put("daily_count", Seq(r.getString(0), r.getString(1)), r.getLong(2))
       }
       // Re-flag only what this batch can have flipped: a changed day
@@ -79,7 +79,7 @@ object AnomalyStream {
       // the W days before the first change anyway.)
       val touched = batch.groupBy(col("event_type"))
         .agg(min(col("day")).as("from_day"), max(col("day")).as("to_day"))
-      AdClickStream.writePerPartition(touched, provider) { (s, r) =>
+      KeyedStore.perPartition(touched, provider) { (s, r) =>
         val (et, from, to) = (r.getString(0), r.getString(1), r.getString(2))
         val days = s.scanPrefix("daily_count", Seq(et))
           .map { case (key, n) => (key(1), n) }.sortBy(_._1)

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming open-order BACKLOG monitor — the live twin of the q244
   * batch panel, and the library's incremental-view-maintenance
@@ -23,8 +23,7 @@ import graft.sink.StoreProvider
   *  - `bl_opened` / `bl_closed` / day cents deltas: day-grain
   *    INCREMENTS with retractions (−1 on the old close day, +1 on the
   *    new) — non-idempotent, so the whole batch's maintenance runs in
-  *    ONE single-writer transaction with the ledger row (statsBatch
-  *    protocol);
+  *    ONE transaction under [[graft.sink.KeyedStore.exactlyOnce]];
   *  - `bl_open_eod` / `bl_open_cents_eod`: the derived running sums,
   *    rebuilt by a walk over the calendar-bounded day domain (the
   *    q212 pattern) — so retractions automatically reshape every
@@ -44,7 +43,7 @@ object BacklogStream {
 
   val Tables: Seq[String] = Seq(
     "bl_close", "bl_day_orders", "bl_day_cents",
-    "bl_open_eod", "bl_open_cents_eod", "graft_applied_batch")
+    "bl_open_eod", "bl_open_cents_eod", KeyedStore.Ledger)
 
   private def dayStr(epochDay: Long): String =
     java.time.LocalDate.ofEpochDay(epochDay).toString
@@ -62,66 +61,53 @@ object BacklogStream {
         max(datediff(to_date(col("ship_ts")), lit("1970-01-01")))
           .cast("long").as("ship_day"))
 
-  /** The micro-batch body (exposed for tests): one single-writer
+  /** The micro-batch body (exposed for tests): one exactly-once
     * transaction applies, per changed order, the retraction of its
     * OLD close-day contribution and the application of the new —
     * first sight also applies the open-day contribution — then
     * rebuilds the derived EOD walk. */
   def backlogBatch(provider: StoreProvider)(
-      batch: DataFrame, batchId: Long): Unit = {
-    batch.repartition(1).foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val s = provider.open()
-        try {
-          s.txBegin()
-          s.increment("graft_applied_batch", Seq("backlog", "batch"), 0L)
-          if (s.get("graft_applied_batch", Seq("backlog", "batch"))
-              .getOrElse(0L) <= batchId) {
-            rows.foreach { r =>
-              val order = r.getLong(0).toString
-              val openDay = r.getLong(1)
-              val cents = r.getLong(2)
-              val shipDay = r.getLong(3)
-              val old = s.get("bl_close", Seq(order))
-              if (old.isEmpty) {
-                // first sight: open-day contribution + initial close
-                s.increment("bl_day_orders", Seq(dayStr(openDay)), 1L)
-                s.increment("bl_day_cents", Seq(dayStr(openDay)), cents)
-                s.increment("bl_day_orders", Seq(dayStr(shipDay)), -1L)
-                s.increment("bl_day_cents", Seq(dayStr(shipDay)), -cents)
-                s.put("bl_close", Seq(order), shipDay)
-              } else if (shipDay > old.get) {
-                // the close moved: retract the old day, apply the new
-                s.increment("bl_day_orders", Seq(dayStr(old.get)), 1L)
-                s.increment("bl_day_cents", Seq(dayStr(old.get)), cents)
-                s.increment("bl_day_orders", Seq(dayStr(shipDay)), -1L)
-                s.increment("bl_day_cents", Seq(dayStr(shipDay)), -cents)
-                s.put("bl_close", Seq(order), shipDay)
-              } // shipDay <= old: a late straggler INSIDE the known
-                // span — the close day already covers it, no change
-            }
-            // derived walk: running open counts/value at EOD over the
-            // day-grain delta map (calendar-bounded)
-            val days = s.scan("bl_day_orders")
-              .map { case (k, v) => (k.head, v) }.sortBy(_._1)
-            var run = 0L
-            s.replaceGroup("bl_open_eod", Nil, days.map { case (d, v) =>
-              run += v; (Seq(d), run)
-            })
-            val cds = s.scan("bl_day_cents")
-              .map { case (k, v) => (k.head, v) }.sortBy(_._1)
-            var runC = 0L
-            s.replaceGroup("bl_open_cents_eod", Nil, cds.map { case (d, v) =>
-              runC += v; (Seq(d), runC)
-            })
-            s.put("graft_applied_batch", Seq("backlog", "batch"),
-              batchId + 1L)
-          }
-          s.txCommit()
-        } finally s.close()
+      batch: DataFrame, batchId: Long): Unit =
+    KeyedStore.exactlyOnce(provider, "backlog", batchId, parts = 1)(batch) {
+        (s, rows) =>
+      rows.foreach { r =>
+        val order = r.getLong(0).toString
+        val openDay = r.getLong(1)
+        val cents = r.getLong(2)
+        val shipDay = r.getLong(3)
+        val old = s.get("bl_close", Seq(order))
+        if (old.isEmpty) {
+          // first sight: open-day contribution + initial close
+          s.increment("bl_day_orders", Seq(dayStr(openDay)), 1L)
+          s.increment("bl_day_cents", Seq(dayStr(openDay)), cents)
+          s.increment("bl_day_orders", Seq(dayStr(shipDay)), -1L)
+          s.increment("bl_day_cents", Seq(dayStr(shipDay)), -cents)
+          s.put("bl_close", Seq(order), shipDay)
+        } else if (shipDay > old.get) {
+          // the close moved: retract the old day, apply the new
+          s.increment("bl_day_orders", Seq(dayStr(old.get)), 1L)
+          s.increment("bl_day_cents", Seq(dayStr(old.get)), cents)
+          s.increment("bl_day_orders", Seq(dayStr(shipDay)), -1L)
+          s.increment("bl_day_cents", Seq(dayStr(shipDay)), -cents)
+          s.put("bl_close", Seq(order), shipDay)
+        } // shipDay <= old: a late straggler INSIDE the known
+          // span — the close day already covers it, no change
       }
+      // derived walk: running open counts/value at EOD over the
+      // day-grain delta map (calendar-bounded)
+      val days = s.scan("bl_day_orders")
+        .map { case (k, v) => (k.head, v) }.sortBy(_._1)
+      var run = 0L
+      s.replaceGroup("bl_open_eod", Nil, days.map { case (d, v) =>
+        run += v; (Seq(d), run)
+      })
+      val cds = s.scan("bl_day_cents")
+        .map { case (k, v) => (k.head, v) }.sortBy(_._1)
+      var runC = 0L
+      s.replaceGroup("bl_open_cents_eod", Nil, cds.map { case (d, v) =>
+        runC += v; (Seq(d), runC)
+      })
     }
-  }
 
   /** The full query: ship stream → order-grain batch summary →
     * retract-and-apply maintenance + derived walk. Update mode: only

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming entry/exit/bounce monitor — the live twin of the q162
   * batch report (`Sessionize.entryExit`): as sessions close on the
@@ -143,8 +143,6 @@ object BounceStream {
         updateUser(gapSeconds))
   }
 
-  private val Ledger = "graft_applied_batch"
-
   /** One micro-batch's per-type delta counts: each closed visit
     * contributes one entry-role and one exit-role row, so all three
     * counters come from ONE aggregate over the (batch-local,
@@ -161,39 +159,20 @@ object BounceStream {
         sum(col("r.b")).as("n_bounces"))
 
   /** foreachBatch body: merge the batch's type-grain delta into the
-    * running store counts. Exactly-once under replay via the ledger
-    * row committed in the same transaction as the increments (the
-    * NearDupStream savings pattern — the delta is domain-bounded, so
-    * one partition, one transaction). */
+    * running store counts, exactly once under replay
+    * ([[KeyedStore.exactlyOnce]]; the delta is domain-bounded, so one
+    * partition, one transaction). */
   def bounceBatch(provider: StoreProvider)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val s0 = provider.open()
-    val applied = try s0.get(Ledger, Seq("bounce", "batch")).getOrElse(0L)
-    finally s0.close()
-    if (batchId < applied) return
-    typeDelta(batch).coalesce(1).foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val s = provider.open()
-        try {
-          s.txBegin()
-          s.increment(Ledger, Seq("bounce", "p0"), 0L)
-          if (s.get(Ledger, Seq("bounce", "p0")).getOrElse(0L) <= batchId) {
-            rows.foreach { r =>
-              val t = Seq(r.getString(0))
-              s.increment("bounce_entries", t, r.getLong(1))
-              s.increment("bounce_exits", t, r.getLong(2))
-              s.increment("bounce_bounces", t, r.getLong(3))
-            }
-            s.put(Ledger, Seq("bounce", "p0"), batchId + 1)
-          }
-          s.txCommit()
-        } finally s.close()
+      batch: DataFrame, batchId: Long): Unit =
+    KeyedStore.exactlyOnce(provider, "bounce", batchId, parts = 1)(
+        typeDelta(batch)) { (s, rows) =>
+      rows.foreach { r =>
+        val t = Seq(r.getString(0))
+        s.increment("bounce_entries", t, r.getLong(1))
+        s.increment("bounce_exits", t, r.getLong(2))
+        s.increment("bounce_bounces", t, r.getLong(3))
       }
     }
-    val s2 = provider.open()
-    try s2.put(Ledger, Seq("bounce", "batch"), batchId + 1)
-    finally s2.close()
-  }
 
   /** The full query: gap sessionizer (append — each visit finalized
     * once) → ledger-guarded per-type increments. */

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming change-point monitor — the live twin of the q334 batch
   * binary segmentation (`Retention.changepoint`): per batch, the
@@ -82,29 +82,22 @@ object ChangepointStream {
     * walk over the whole (bounded) ledger. */
   def changepointBatch(provider: StoreProvider)(
       batch: DataFrame, batchId: Long): Unit = {
-    batch.repartition(1).foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val s = provider.open()
-        try {
-          s.txBegin()
-          rows.foreach { r =>
-            s.put(DayTable, Seq(r.getLong(0).toString), r.getLong(1))
-          }
-          val ledger = s.scan(DayTable)
-            .map { case (k, v) => (k.head.toLong, v) }.toMap
-          val fields = changepointWalk(ledger) match {
-            case Some((d, n, nb, na, mb, ma, delta, score)) => Seq(
-              "split_daynum" -> d, "n_days" -> n, "n_before" -> nb,
-              "n_after" -> na, "mean_before_cents" -> mb,
-              "mean_after_cents" -> ma, "delta_cents" -> delta,
-              "score_cents" -> score)
-            case None => Nil
-          }
-          s.replaceGroup(ResultTable, Nil,
-            fields.map { case (k, v) => (Seq(k), v) })
-          s.txCommit()
-        } finally s.close()
+    KeyedStore.singleWriter(batch, provider) { (s, rows) =>
+      rows.foreach { r =>
+        s.put(DayTable, Seq(r.getLong(0).toString), r.getLong(1))
       }
+      val ledger = s.scan(DayTable)
+        .map { case (k, v) => (k.head.toLong, v) }.toMap
+      val fields = changepointWalk(ledger) match {
+        case Some((d, n, nb, na, mb, ma, delta, score)) => Seq(
+          "split_daynum" -> d, "n_days" -> n, "n_before" -> nb,
+          "n_after" -> na, "mean_before_cents" -> mb,
+          "mean_after_cents" -> ma, "delta_cents" -> delta,
+          "score_cents" -> score)
+        case None => Nil
+      }
+      s.replaceGroup(ResultTable, Nil,
+        fields.map { case (k, v) => (Seq(k), v) })
     }
   }
 

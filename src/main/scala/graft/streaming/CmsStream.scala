@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.CountMin
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming count-min sketch — the live twin of the q296 batch
   * sketch (`graft.ops.CountMin`): the d×w counter grid IS the
@@ -49,17 +49,10 @@ object CmsStream {
   /** Idempotent absolute puts of the touched cells. */
   def writeBatch(provider: StoreProvider)(
       batch: DataFrame, batchId: Long): Unit =
-    batch.repartition(1).foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val s = provider.open()
-        try {
-          s.txBegin()
-          rows.foreach { r =>
-            s.put(Table, Seq(r.getInt(0).toString, r.getLong(1).toString),
-              r.getLong(2))
-          }
-          s.txCommit()
-        } finally s.close()
+    KeyedStore.singleWriter(batch, provider) { (s, rows) =>
+      rows.foreach { r =>
+        s.put(Table, Seq(r.getInt(0).toString, r.getLong(1).toString),
+          r.getLong(2))
       }
     }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming CUSUM change-point monitor — the live deployment of the
   * q212 batch detector (`Retention.cusumRevenue`), against an
@@ -58,12 +58,12 @@ object CusumStream {
       batch: DataFrame, batchId: Long): Unit = {
     batch.persist()
     try {
-      AdClickStream.writePerPartition(batch, provider) { (s, r) =>
+      KeyedStore.perPartition(batch, provider) { (s, r) =>
         s.put("cusum_day_cents", Seq(r.getString(0)), r.getLong(1))
       }
       // one writer walks the absolute day map in day order — Page's
       // recursion S_t = max(0, S_{t-1} + dev_t), integer throughout
-      AdClickStream.writePerPartition(
+      KeyedStore.perPartition(
         batch.select(lit("all").as("g")).distinct(), provider) { (s, _) =>
         val days = s.scan("cusum_day_cents")
           .map { case (k, v) => (k.head, v) }.toSeq.sortBy(_._1)

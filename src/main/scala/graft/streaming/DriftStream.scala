@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.Retention
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming distribution-drift monitor — the live twin of the q109
   * batch report ([[Retention.valueDrift]]): total-variation distance
@@ -50,7 +50,7 @@ object DriftStream {
     * together (see [[driftQuery]]). */
   def loadReference(ref: DataFrame, provider: StoreProvider,
       bucketWidth: Double = 25.0, nBuckets: Int = 20): Unit =
-    AdClickStream.writePerPartition(
+    KeyedStore.perPartition(
       Retention.valueHistogram(ref, bucketWidth, nBuckets), provider) {
       (s, r) =>
         s.put("drift_ref", Seq(r.getString(0), r.getLong(1).toString),
@@ -81,11 +81,11 @@ object DriftStream {
       batch: DataFrame, batchId: Long): Unit = {
     batch.persist()
     try {
-      AdClickStream.writePerPartition(batch, provider) { (s, r) =>
+      KeyedStore.perPartition(batch, provider) { (s, r) =>
         s.put("drift_count", Seq(r.getString(0), r.getString(1)), r.getLong(2))
       }
       val touched = batch.select(col("event_type")).distinct()
-      AdClickStream.writePerPartition(touched, provider) { (s, r) =>
+      KeyedStore.perPartition(touched, provider) { (s, r) =>
         val et = r.getString(0)
         val ref = s.scanPrefix("drift_ref", Seq(et))
           .map { case (k, v) => k(1) -> v }.toMap

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming EWMA spike monitor — the live twin of the q272 batch
   * panel (`Retention.ewmaRevenue`): per order day, the day's revenue,
@@ -60,42 +60,35 @@ object EwmaStream {
       batch: DataFrame, batchId: Long): Unit = {
     require(windowDays >= 2 && windowDays <= 32, "windowDays in [2,32]")
     val denom = (1L << windowDays) - 1L
-    batch.repartition(1).foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val s = provider.open()
-        try {
-          s.txBegin()
-          rows.foreach { r =>
-            s.put("ew_day_cents", Seq(r.getString(0)), r.getLong(1))
-          }
-          // ISO day strings sort chronologically
-          val panel = s.scan("ew_day_cents")
-            .map { case (k, v) => (k.head, v) }.sortBy(_._1)
-          val nums = panel.map(p => java.time.LocalDate.parse(p._1).toEpochDay)
-          val ewma = Array.newBuilder[(String, Long)]
-          val spike = Array.newBuilder[(String, Long)]
-          var i = 0
-          while (i < panel.length) {
-            var wsum = 0L
-            var j = i
-            while (j >= 0 && nums(i) - nums(j) <= windowDays - 1L) {
-              wsum += panel(j)._2 << (windowDays - 1L - (nums(i) - nums(j))).toInt
-              j -= 1
-            }
-            val e = wsum / denom
-            ewma += ((panel(i)._1, e))
-            if (e > 0L)
-              spike += ((panel(i)._1,
-                math.floor(10000.0 * panel(i)._2 / e).toLong))
-            i += 1
-          }
-          s.replaceGroup("ew_ewma_cents", Nil,
-            ewma.result().map { case (d, v) => (Seq(d), v) }.toSeq)
-          s.replaceGroup("ew_spike_bp", Nil,
-            spike.result().map { case (d, v) => (Seq(d), v) }.toSeq)
-          s.txCommit()
-        } finally s.close()
+    KeyedStore.singleWriter(batch, provider) { (s, rows) =>
+      rows.foreach { r =>
+        s.put("ew_day_cents", Seq(r.getString(0)), r.getLong(1))
       }
+      // ISO day strings sort chronologically
+      val panel = s.scan("ew_day_cents")
+        .map { case (k, v) => (k.head, v) }.sortBy(_._1)
+      val nums = panel.map(p => java.time.LocalDate.parse(p._1).toEpochDay)
+      val ewma = Array.newBuilder[(String, Long)]
+      val spike = Array.newBuilder[(String, Long)]
+      var i = 0
+      while (i < panel.length) {
+        var wsum = 0L
+        var j = i
+        while (j >= 0 && nums(i) - nums(j) <= windowDays - 1L) {
+          wsum += panel(j)._2 << (windowDays - 1L - (nums(i) - nums(j))).toInt
+          j -= 1
+        }
+        val e = wsum / denom
+        ewma += ((panel(i)._1, e))
+        if (e > 0L)
+          spike += ((panel(i)._1,
+            math.floor(10000.0 * panel(i)._2 / e).toLong))
+        i += 1
+      }
+      s.replaceGroup("ew_ewma_cents", Nil,
+        ewma.result().map { case (d, v) => (Seq(d), v) }.toSeq)
+      s.replaceGroup("ew_spike_bp", Nil,
+        spike.result().map { case (d, v) => (Seq(d), v) }.toSeq)
     }
   }
 

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming functional-dependency monitor — the live twin of the
   * q319 batch audit (`Profile.fdAudit`): the (lhs, rhs) cell-count
@@ -42,16 +42,9 @@ object FdStream {
   /** Idempotent absolute puts of the touched cells. */
   def writeBatch(provider: StoreProvider)(
       batch: DataFrame, batchId: Long): Unit =
-    batch.repartition(1).foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val s = provider.open()
-        try {
-          s.txBegin()
-          rows.foreach { r =>
-            s.put(Table, Seq(r.getString(0), r.getString(1)), r.getLong(2))
-          }
-          s.txCommit()
-        } finally s.close()
+    KeyedStore.singleWriter(batch, provider) { (s, rows) =>
+      rows.foreach { r =>
+        s.put(Table, Seq(r.getString(0), r.getString(1)), r.getLong(2))
       }
     }
 

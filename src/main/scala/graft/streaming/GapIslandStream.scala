@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming gap-island monitor — the live twin of the q340 batch
   * gaps-and-islands read (`Retention.gapIslands`): per batch, every
@@ -45,26 +45,19 @@ object GapIslandStream {
     * table + census rebuild over the whole (bounded) ledger. */
   def gapBatch(provider: StoreProvider)(
       batch: DataFrame, batchId: Long): Unit = {
-    batch.repartition(1).foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val s = provider.open()
-        try {
-          s.txBegin()
-          rows.foreach { r =>
-            s.put(DayTable, Seq(r.getLong(0).toString), r.getLong(1))
-          }
-          val days = s.scan(DayTable).map(_._1.head.toLong).toSeq
-          val gaps = gapWalk(days)
-          s.replaceGroup(GapTable, Nil,
-            gaps.map { case (st, len) => (Seq(st.toString), len) })
-          s.replaceGroup(CensusTable, Nil, Seq(
-            (Seq("n_gaps"), gaps.size.toLong),
-            (Seq("max_gap_days"),
-              if (gaps.isEmpty) 0L else gaps.map(_._2).max),
-            (Seq("days_missing"), gaps.map(_._2).sum)))
-          s.txCommit()
-        } finally s.close()
+    KeyedStore.singleWriter(batch, provider) { (s, rows) =>
+      rows.foreach { r =>
+        s.put(DayTable, Seq(r.getLong(0).toString), r.getLong(1))
       }
+      val days = s.scan(DayTable).map(_._1.head.toLong).toSeq
+      val gaps = gapWalk(days)
+      s.replaceGroup(GapTable, Nil,
+        gaps.map { case (st, len) => (Seq(st.toString), len) })
+      s.replaceGroup(CensusTable, Nil, Seq(
+        (Seq("n_gaps"), gaps.size.toLong),
+        (Seq("max_gap_days"),
+          if (gaps.isEmpty) 0L else gaps.map(_._2).max),
+        (Seq("days_missing"), gaps.map(_._2).sum)))
     }
   }
 

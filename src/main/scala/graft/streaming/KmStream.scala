@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StreamingQuery, Trigger}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming Kaplan–Meier survival — the live twin of q356
   * (`graft.ops.Retention.kaplanMeier`): per-user state tracks the
@@ -61,50 +61,44 @@ object KmStream {
   }
 
   /** Micro-batch body: absolute span puts, then the curve rebuild
-    * off the full census through the shared ladder. */
+    * off the full census through the shared ladder, in one
+    * transaction so no reader sees the curve between its DELETE and
+    * its INSERTs. */
   def kmBatch(provider: StoreProvider)(
-      batch: DataFrame, batchId: Long): Unit = {
-    batch.repartition(1).foreachPartition { (rows: Iterator[Row]) =>
-      val s = provider.open()
-      try {
-        var touched = false
-        rows.foreach { r =>
-          touched = true
-          val u = r.getLong(0).toString
-          s.put(SpanTable, Seq(u, "first"), r.getLong(1))
-          s.put(SpanTable, Seq(u, "last"), r.getLong(2))
+      batch: DataFrame, batchId: Long): Unit =
+    KeyedStore.singleWriter(batch, provider) { (s, rows) =>
+      rows.foreach { r =>
+        val u = r.getLong(0).toString
+        s.put(SpanTable, Seq(u, "first"), r.getLong(1))
+        s.put(SpanTable, Seq(u, "last"), r.getLong(2))
+      }
+      // .toSeq BEFORE the map: mapping a Map to (first, last)
+      // pairs would re-key on first_day and silently merge users
+      val spans = s.scan(SpanTable)
+        .groupBy(_._1.head).toSeq
+        .map { case (_, kv) =>
+          val m = kv.map { case (k, v) => k(1) -> v }.toMap
+          (m("first"), m("last"))
         }
-        if (touched) {
-          // .toSeq BEFORE the map: mapping a Map to (first, last)
-          // pairs would re-key on first_day and silently merge users
-          val spans = s.scan(SpanTable)
-            .groupBy(_._1.head).toSeq
-            .map { case (_, kv) =>
-              val m = kv.map { case (k, v) => k(1) -> v }.toMap
-              (m("first"), m("last"))
-            }
-          val censorDay = spans.map(_._2).max
-          val lt = spans
-            .groupBy { case (f, l) => (l - f, l == censorDay) }
-            .map { case ((t, cens), g) =>
-              (t, cens, g.size.toLong) }
-            .groupBy(_._1).map { case (t, g) =>
-              (t,
-                g.collect { case (_, false, n) => n }.sum,
-                g.collect { case (_, true, n) => n }.sum)
-            }.toSeq
-          s.replaceGroup(CurveTable, Nil,
-            graft.ops.Retention.kmLadder(lt).flatMap {
-              case (t, nRisk, d, c, ppm) => Seq(
-                (Seq(t.toString, "n_risk"): Seq[String], nRisk),
-                (Seq(t.toString, "n_events"): Seq[String], d),
-                (Seq(t.toString, "n_censored"): Seq[String], c),
-                (Seq(t.toString, "survival_ppm"): Seq[String], ppm))
-            })
-        }
-      } finally s.close()
+      val censorDay = spans.map(_._2).max
+      val lt = spans
+        .groupBy { case (f, l) => (l - f, l == censorDay) }
+        .map { case ((t, cens), g) =>
+          (t, cens, g.size.toLong) }
+        .groupBy(_._1).map { case (t, g) =>
+          (t,
+            g.collect { case (_, false, n) => n }.sum,
+            g.collect { case (_, true, n) => n }.sum)
+        }.toSeq
+      s.replaceGroup(CurveTable, Nil,
+        graft.ops.Retention.kmLadder(lt).flatMap {
+          case (t, nRisk, d, c, ppm) => Seq(
+            (Seq(t.toString, "n_risk"): Seq[String], nRisk),
+            (Seq(t.toString, "n_events"): Seq[String], d),
+            (Seq(t.toString, "n_censored"): Seq[String], c),
+            (Seq(t.toString, "survival_ppm"): Seq[String], ppm))
+        })
     }
-  }
 
   /** The full query: events → span updates → absolute puts → curve. */
   def kmQuery(events: DataFrame, provider: StoreProvider,

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming fulfillment-latency monitor — the live twin of the q325
   * batch panel (`AreaTopProducts.latencySlaTrend`): the per-month
@@ -45,17 +45,10 @@ object LatencyBandStream {
   /** Idempotent absolute puts of the touched cells. */
   def writeBatch(provider: StoreProvider)(
       batch: DataFrame, batchId: Long): Unit =
-    batch.repartition(1).foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val s = provider.open()
-        try {
-          s.txBegin()
-          rows.foreach { r =>
-            s.put(Table, Seq(r.getLong(0).toString, r.getLong(1).toString),
-              r.getLong(2))
-          }
-          s.txCommit()
-        } finally s.close()
+    KeyedStore.singleWriter(batch, provider) { (s, rows) =>
+      rows.foreach { r =>
+        s.put(Table, Seq(r.getLong(0).toString, r.getLong(1).toString),
+          r.getLong(2))
       }
     }
 

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StreamingQuery, Trigger}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming Markov removal-effect attribution — the live twin of
   * q292 (`graft.ops.Market.markovAttribution`): per-user session
@@ -33,7 +33,6 @@ object MarkovStream {
   val MatrixTable = "ma_matrix"
   val StartsTable = "ma_starts"
   val CreditsTable = "ma_credits"
-  private val AppliedMarker = "graft_applied_batch"
 
   /** One emitted step; `prev_type` None = session start. */
   final case class MStep(user_id: Long, prev_type: Option[String],
@@ -72,53 +71,39 @@ object MarkovStream {
   }
 
   /** Micro-batch body: collapse to type²+start grain, apply the
-    * increments in ONE ledger-guarded transaction, then re-publish
-    * the credits off the full accumulated matrix. Only defined
-    * (non-NULL in the batch op) cells are written. */
+    * increments exactly once ([[KeyedStore.exactlyOnce]]; type²-grain
+    * metadata, so one partition, one transaction), then re-publish
+    * the credits off the full accumulated matrix in that same
+    * transaction. Only defined (non-NULL in the batch op) cells are
+    * written. */
   def creditsBatch(provider: StoreProvider, channels: Seq[String],
       target: String = "purchase", steps: Int = 5)(
-      batch: DataFrame, batchId: Long): Unit = {
-    batch.groupBy(col("prev_type"), col("next_type"))
-      .agg(count(lit(1)).as("c"))
-      .repartition(1) // type²-grain metadata: one atomic apply tx
-      .foreachPartition { (rows: Iterator[Row]) =>
-        if (rows.hasNext) {
-          val s = provider.open()
-          try {
-            s.txBegin()
-            // create-or-lock the ledger row, THEN check (the T4 rule)
-            s.increment(AppliedMarker, Seq("markov", "batch"), 0L)
-            val applied = s.get(AppliedMarker, Seq("markov", "batch"))
-              .getOrElse(-1L)
-            if (applied < batchId + 1L) {
-              rows.foreach { r =>
-                if (r.isNullAt(0))
-                  s.increment(StartsTable, Seq(r.getString(1)), r.getLong(2))
-                else
-                  s.increment(MatrixTable,
-                    Seq(r.getString(0), r.getString(1)), r.getLong(2))
-              }
-              s.put(AppliedMarker, Seq("markov", "batch"), batchId + 1L)
-              val matrix = s.scan(MatrixTable)
-                .map { case (k, v) => ((k(0), k(1)), v) }.toMap
-              val starts = s.scan(StartsTable)
-                .map { case (k, v) => (k(0), v) }.toMap
-              val credits = graft.ops.Market
-                .markovRemovalLadder(matrix, starts, channels, target, steps)
-              s.replaceGroup(CreditsTable, Nil, credits.flatMap {
-                case (ch, pf, pr, rm, cr) => Seq(
-                  pf.map(v => (Seq(ch, "p_full_bp"): Seq[String], v)),
-                  pr.map(v => (Seq(ch, "p_removed_bp"): Seq[String], v)),
-                  rm.map(v => (Seq(ch, "removal_bp"): Seq[String], v)),
-                  cr.map(v => (Seq(ch, "credit_bp"): Seq[String], v))
-                ).flatten
-              })
-            }
-            s.txCommit()
-          } finally s.close()
-        }
+      batch: DataFrame, batchId: Long): Unit =
+    KeyedStore.exactlyOnce(provider, "markov", batchId, parts = 1)(
+      batch.groupBy(col("prev_type"), col("next_type"))
+        .agg(count(lit(1)).as("c"))) { (s, rows) =>
+      rows.foreach { r =>
+        if (r.isNullAt(0))
+          s.increment(StartsTable, Seq(r.getString(1)), r.getLong(2))
+        else
+          s.increment(MatrixTable,
+            Seq(r.getString(0), r.getString(1)), r.getLong(2))
       }
-  }
+      val matrix = s.scan(MatrixTable)
+        .map { case (k, v) => ((k(0), k(1)), v) }.toMap
+      val starts = s.scan(StartsTable)
+        .map { case (k, v) => (k(0), v) }.toMap
+      val credits = graft.ops.Market
+        .markovRemovalLadder(matrix, starts, channels, target, steps)
+      s.replaceGroup(CreditsTable, Nil, credits.flatMap {
+        case (ch, pf, pr, rm, cr) => Seq(
+          pf.map(v => (Seq(ch, "p_full_bp"): Seq[String], v)),
+          pr.map(v => (Seq(ch, "p_removed_bp"): Seq[String], v)),
+          rm.map(v => (Seq(ch, "removal_bp"): Seq[String], v)),
+          cr.map(v => (Seq(ch, "credit_bp"): Seq[String], v))
+        ).flatten
+      })
+    }
 
   /** The full query: events → steps+starts → increments → ladder. */
   def creditsQuery(events: DataFrame, provider: StoreProvider,

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.Dedup
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Ingestion-time near-duplicate detection against an indexed corpus
   * — the streaming half of `Dedup.incrementalDedupKept`: as documents
@@ -82,51 +82,32 @@ object NearDupStream {
   /** Store tables used by [[savingsBatch]]: the running totals, keyed
     * (source, metric), plus the shared idempotence ledger. */
   val SavingsTable = "neardup_savings"
-  private val Ledger = "graft_applied_batch"
   private val Metrics = Seq("n_docs", "n_dropped", "tokens_total", "tokens_dropped")
 
   /** foreachBatch body: merge one micro-batch's per-source savings
-    * delta (vs the static `corpus`) into the running store totals.
-    * Idempotent under batch replay via the ledger row committed in
-    * the same transaction as the increments. */
+    * delta (vs the static `corpus`) into the running store totals,
+    * exactly once under batch replay ([[KeyedStore.exactlyOnce]]). */
   def savingsBatch(provider: StoreProvider, corpus: DataFrame,
       thresholdBp: Long = 8000L)(batch: DataFrame, batchId: Long): Unit = {
-    val s0 = provider.open()
-    val applied = try s0.get(Ledger, Seq("savings", "batch")).getOrElse(0L)
-    finally s0.close()
-    if (batchId < applied) return // cleanly applied batch — skip
-    val (delta0, cached) = Dedup.incrementalSavingsReportCached(
-      batch.select(col("doc_id"), col("text"), col("lang"), col("source")),
-      corpus, thresholdBp)
-    val delta = delta0.select(col("source"), col("n_docs"), col("n_dropped"),
-      col("tokens_total"), col("tokens_dropped"))
+    var cached: Seq[DataFrame] = Nil
     // domain-bounded delta → one partition, one store transaction
-    try delta.coalesce(1).foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val s = provider.open()
-        try {
-          s.txBegin()
-          // create-or-lock the ledger row, THEN check (serializes a
-          // zombie retry of the same batch; see AdClickStream)
-          s.increment(Ledger, Seq("savings", "p0"), 0L)
-          if (s.get(Ledger, Seq("savings", "p0")).getOrElse(0L) <= batchId) {
-            rows.foreach { r =>
-              Metrics.zipWithIndex.foreach { case (m, i) =>
-                s.increment(SavingsTable, Seq(r.getString(0), m), r.getLong(i + 1))
-              }
-            }
-            s.put(Ledger, Seq("savings", "p0"), batchId + 1)
-          }
-          s.txCommit()
-        } finally s.close()
+    try KeyedStore.exactlyOnce(provider, "savings", batchId, parts = 1) {
+      val (delta, c) = Dedup.incrementalSavingsReportCached(
+        batch.select(col("doc_id"), col("text"), col("lang"), col("source")),
+        corpus, thresholdBp)
+      cached = c
+      delta.select(col("source"), col("n_docs"), col("n_dropped"),
+        col("tokens_total"), col("tokens_dropped"))
+    } { (s, rows) =>
+      rows.foreach { r =>
+        Metrics.zipWithIndex.foreach { case (m, i) =>
+          s.increment(SavingsTable, Seq(r.getString(0), m), r.getLong(i + 1))
+        }
       }
     }
     // release the per-batch signature caches — a long-running stream
     // must not accumulate a pair of pinned frames per micro-batch
     finally cached.foreach(_.unpersist(blocking = false))
-    val s2 = provider.open()
-    try s2.put(Ledger, Seq("savings", "batch"), batchId + 1)
-    finally s2.close()
   }
 
   /** The running report, read back from the store: one row per source

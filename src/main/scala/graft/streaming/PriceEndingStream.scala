@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming price-ending monitor — the live twin of the q346 batch
   * census (`Integrity.priceEndings`): the cent-ending histogram of
@@ -63,25 +63,18 @@ object PriceEndingStream {
     * census rebuild over the whole (≤100-cell) ledger. */
   def endingBatch(provider: StoreProvider, k: Int = 8)(
       batch: DataFrame, batchId: Long): Unit = {
-    batch.repartition(1).foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val s = provider.open()
-        try {
-          s.txBegin()
-          rows.foreach { r =>
-            s.put(CellTable, Seq(r.getLong(0).toString), r.getLong(1))
-          }
-          val cells = s.scan(CellTable)
-            .map { case (kk, v) => (kk.head.toLong, v) }.toMap
-          s.replaceGroup(CensusTable, Nil,
-            census(cells, k).flatMap { case (label, n, sh, ex, xs) =>
-              Seq((Seq(label, "n"), n), (Seq(label, "share_bp"), sh),
-                (Seq(label, "expected_bp"), ex),
-                (Seq(label, "excess_bp"), xs))
-            })
-          s.txCommit()
-        } finally s.close()
+    KeyedStore.singleWriter(batch, provider) { (s, rows) =>
+      rows.foreach { r =>
+        s.put(CellTable, Seq(r.getLong(0).toString), r.getLong(1))
       }
+      val cells = s.scan(CellTable)
+        .map { case (kk, v) => (kk.head.toLong, v) }.toMap
+      s.replaceGroup(CensusTable, Nil,
+        census(cells, k).flatMap { case (label, n, sh, ex, xs) =>
+          Seq((Seq(label, "n"), n), (Seq(label, "share_bp"), sh),
+            (Seq(label, "expected_bp"), ex),
+            (Seq(label, "excess_bp"), xs))
+        })
     }
   }
 

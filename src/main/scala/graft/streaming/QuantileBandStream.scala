@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming log-band quantile sketch — the live twin of the q303
   * batch table (`Percentiles.sketchQuantileTable`'s band side): the
@@ -49,17 +49,10 @@ object QuantileBandStream {
   /** Idempotent absolute puts of the touched band cells. */
   def writeBatch(provider: StoreProvider)(
       batch: DataFrame, batchId: Long): Unit =
-    batch.repartition(1).foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val s = provider.open()
-        try {
-          s.txBegin()
-          rows.foreach { r =>
-            s.put(Table, Seq(r.getString(0), r.getInt(1).toString),
-              r.getLong(2))
-          }
-          s.txCommit()
-        } finally s.close()
+    KeyedStore.singleWriter(batch, provider) { (s, rows) =>
+      rows.foreach { r =>
+        s.put(Table, Seq(r.getString(0), r.getInt(1).toString),
+          r.getLong(2))
       }
     }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming revenue-seasonality monitor — the live twin of the q183
   * batch report (`Retention.revenueSeasonality`): per
@@ -56,7 +56,7 @@ object RevenueStream {
       batch: DataFrame, batchId: Long): Unit = {
     batch.persist()
     try {
-      AdClickStream.writePerPartition(batch, provider) { (s, r) =>
+      KeyedStore.perPartition(batch, provider) { (s, r) =>
         val m = Seq(r.getLong(0).toString)
         s.put("rev_month_orders", m, r.getLong(1))
         s.put("rev_month_cents", m, r.getLong(2))
@@ -65,7 +65,7 @@ object RevenueStream {
       // store state; the double arithmetic mirrors the batch column
       // term-for-term (10000.0 * cents * 12 / total, then floor) so
       // stream and batch agree bit-for-bit
-      AdClickStream.writePerPartition(
+      KeyedStore.perPartition(
         batch.select(lit("all").as("g")).distinct(), provider) { (s, _) =>
         val months = s.scan("rev_month_cents")
           .map { case (k, v) => (k.head, v) }

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming seasonality monitor — the live twin of the q301 batch
   * autocorrelation panel (`Retention.autocorrelation`): per batch,
@@ -74,24 +74,17 @@ object SeasonalityStream {
       batch: DataFrame, batchId: Long): Unit = {
     require(lags.nonEmpty && lags == lags.sorted && lags.head >= 1,
       "lags ascending, >= 1")
-    batch.repartition(1).foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val s = provider.open()
-        try {
-          s.txBegin()
-          rows.foreach { r =>
-            s.put(DayTable, Seq(r.getLong(0).toString), r.getLong(1))
-          }
-          val ledger = s.scan(DayTable)
-            .map { case (k, v) => (k.head.toLong, v) }.toMap
-          val panel = autocorrWalk(ledger, lags)
-          s.replaceGroup(PairsTable, Nil,
-            panel.map { case (l, np, _) => (Seq(l.toString), np) })
-          s.replaceGroup(RTable, Nil,
-            panel.collect { case (l, _, Some(r)) => (Seq(l.toString), r) })
-          s.txCommit()
-        } finally s.close()
+    KeyedStore.singleWriter(batch, provider) { (s, rows) =>
+      rows.foreach { r =>
+        s.put(DayTable, Seq(r.getLong(0).toString), r.getLong(1))
       }
+      val ledger = s.scan(DayTable)
+        .map { case (k, v) => (k.head.toLong, v) }.toMap
+      val panel = autocorrWalk(ledger, lags)
+      s.replaceGroup(PairsTable, Nil,
+        panel.map { case (l, np, _) => (Seq(l.toString), np) })
+      s.replaceGroup(RTable, Nil,
+        panel.collect { case (l, _, Some(r)) => (Seq(l.toString), r) })
     }
   }
 

@@ -2,13 +2,13 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import org.apache.datasketches.hll.{HllSketch, TgtHllType, Union}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming rolling-distinct-users monitor — the live twin of the
   * q281 batch panel (`Retention.rollingUsersSketch`): per day, the
@@ -80,40 +80,33 @@ object SketchStream {
       windows: Seq[Int] = Seq(7, 14, 28), lgK: Int = 12)(
       batch: DataFrame, batchId: Long): Unit = {
     require(windows.nonEmpty && windows == windows.sorted, "windows ascending")
-    batch.repartition(1).foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val led = SketchLedger.registry(registry)
-        rows.foreach { r =>
-          led.put(r.getString(0), r.getAs[Array[Byte]](1))
+    KeyedStore.singleWriter(batch, provider) { (s, rows) =>
+      val led = SketchLedger.registry(registry)
+      rows.foreach { r =>
+        led.put(r.getString(0), r.getAs[Array[Byte]](1))
+      }
+      val days = {
+        val it = led.keySet().iterator()
+        val b = Seq.newBuilder[String]
+        while (it.hasNext) b += it.next()
+        b.result().sorted
+      }
+      val nums = days.map(d => java.time.LocalDate.parse(d).toEpochDay)
+      var i = 0
+      while (i < days.length) {
+        val own = HllSketch.heapify(led.get(days(i)))
+        s.put("sk_dau", Seq(days(i)), Math.round(own.getEstimate))
+        windows.foreach { w =>
+          val u = new Union(lgK)
+          var j = i
+          while (j >= 0 && nums(j) > nums(i) - w) {
+            u.update(HllSketch.heapify(led.get(days(j))))
+            j -= 1
+          }
+          s.put("sk_wau", Seq(w.toString, days(i)),
+            Math.round(u.getResult(TgtHllType.HLL_8).getEstimate))
         }
-        val s = provider.open()
-        try {
-          s.txBegin()
-          val days = {
-            val it = led.keySet().iterator()
-            val b = Seq.newBuilder[String]
-            while (it.hasNext) b += it.next()
-            b.result().sorted
-          }
-          val nums = days.map(d => java.time.LocalDate.parse(d).toEpochDay)
-          var i = 0
-          while (i < days.length) {
-            val own = HllSketch.heapify(led.get(days(i)))
-            s.put("sk_dau", Seq(days(i)), Math.round(own.getEstimate))
-            windows.foreach { w =>
-              val u = new Union(lgK)
-              var j = i
-              while (j >= 0 && nums(j) > nums(i) - w) {
-                u.update(HllSketch.heapify(led.get(days(j))))
-                j -= 1
-              }
-              s.put("sk_wau", Seq(w.toString, days(i)),
-                Math.round(u.getResult(TgtHllType.HLL_8).getEstimate))
-            }
-            i += 1
-          }
-          s.txCommit()
-        } finally s.close()
+        i += 1
       }
     }
   }

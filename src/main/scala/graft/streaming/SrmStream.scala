@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.Experiment
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming sample-ratio-mismatch monitor — the live twin of the
   * q147 batch check ([[Experiment.srmCheck]]): per tumbling
@@ -68,12 +68,12 @@ object SrmStream {
       toleranceBp: Long)(batch: DataFrame, batchId: Long): Unit = {
     batch.persist()
     try {
-      AdClickStream.writePerPartition(batch, provider) { (s, r) =>
+      KeyedStore.perPartition(batch, provider) { (s, r) =>
         s.put("srm_users", Seq(r.getString(0), r.getString(1)),
           r.getLong(2))
       }
       val touched = batch.select(col("window_start")).distinct()
-      AdClickStream.writePerPartition(touched, provider) { (s, r) =>
+      KeyedStore.perPartition(touched, provider) { (s, r) =>
         val w = r.getString(0)
         val byArm = s.scanPrefix("srm_users", Seq(w))
           .map { case (k, v) => k(1) -> v }.toMap

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming stationary-mix monitor — the live twin of the q350
   * batch power iteration (`Market.stationaryMix`): rides
@@ -22,11 +22,9 @@ import graft.sink.StoreProvider
   * ((type, field) → value, replaced per batch; fields
   * stationary_ppm/empirical_ppm/delta_ppm). Steps arrive APPEND
   * (each exactly once from the state machine), so the matrix is
-  * maintained by INCREMENTS — guarded by a batch-id ledger row in
-  * the same transaction (the AdClickStream T4 idempotence pattern,
-  * simplified to one apply partition because the increment frame is
-  * type²-grain metadata): a replayed batch sees its id in the
-  * ledger and skips, so nothing double-counts. Chaining an SS
+  * maintained by INCREMENTS under [[graft.sink.KeyedStore.exactlyOnce]]
+  * (one apply partition, because the increment frame is type²-grain
+  * metadata), so a replayed batch double-counts nothing. Chaining an SS
   * aggregate AFTER flatMapGroupsWithState would instead trip
   * Spark's global-watermark correctness check. The walk is EXACTLY
   * the q350 integer ladder (floors, first-type deficit), shared
@@ -48,46 +46,28 @@ object StationaryStream {
       iters: Int = 20): Seq[(String, Long, Long, Long)] =
     graft.ops.Market.stationaryWalk(matrix, iters)
 
-  private val AppliedMarker = "graft_applied_batch"
-
   /** Micro-batch body over the APPENDED steps: distributed count to
-    * type² grain, one ledger-guarded increment transaction, then the
+    * type² grain, one exactly-once increment transaction, then the
     * ladder over the full matrix. */
   def mixBatch(provider: StoreProvider, iters: Int = 20)(
-      batch: DataFrame, batchId: Long): Unit = {
-    batch.groupBy(col("prev_type"), col("next_type"))
-      .agg(count(lit(1)).as("c"))
-      .repartition(1) // type²-grain metadata: one atomic apply tx
-      .foreachPartition { (rows: Iterator[Row]) =>
-        if (rows.hasNext) {
-          val s = provider.open()
-          try {
-            s.txBegin()
-            // create-or-lock the ledger row, THEN check (the T4 rule)
-            s.increment(AppliedMarker, Seq("mix", "batch"), 0L)
-            val applied = s.get(AppliedMarker, Seq("mix", "batch"))
-              .getOrElse(-1L)
-            if (applied < batchId + 1L) {
-              rows.foreach { r =>
-                s.increment(MatrixTable,
-                  Seq(r.getString(0), r.getString(1)), r.getLong(2))
-              }
-              s.put(AppliedMarker, Seq("mix", "batch"), batchId + 1L)
-              val matrix = s.scan(MatrixTable)
-                .map { case (k, v) => ((k(0), k(1)), v) }.toMap
-              s.replaceGroup(MixTable, Nil,
-                stationaryWalk(matrix, iters).flatMap {
-                  case (t, st, em, d) => Seq(
-                    (Seq(t, "stationary_ppm"), st),
-                    (Seq(t, "empirical_ppm"), em),
-                    (Seq(t, "delta_ppm"), d))
-                })
-            }
-            s.txCommit()
-          } finally s.close()
-        }
+      batch: DataFrame, batchId: Long): Unit =
+    KeyedStore.exactlyOnce(provider, "mix", batchId, parts = 1)(
+      batch.groupBy(col("prev_type"), col("next_type"))
+        .agg(count(lit(1)).as("c"))) { (s, rows) =>
+      rows.foreach { r =>
+        s.increment(MatrixTable,
+          Seq(r.getString(0), r.getString(1)), r.getLong(2))
       }
-  }
+      val matrix = s.scan(MatrixTable)
+        .map { case (k, v) => ((k(0), k(1)), v) }.toMap
+      s.replaceGroup(MixTable, Nil,
+        stationaryWalk(matrix, iters).flatMap {
+          case (t, st, em, d) => Seq(
+            (Seq(t, "stationary_ppm"), st),
+            (Seq(t, "empirical_ppm"), em),
+            (Seq(t, "delta_ppm"), d))
+        })
+    }
 
   /** The full query: events → steps → increments → ladder. */
   def mixQuery(events: DataFrame, provider: StoreProvider,

@@ -2,12 +2,12 @@ package graft.streaming
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.TextAnalysis
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming vocabulary heavy-hitters monitor — the live twin of the
   * q54 batch operator (`TextAnalysis.heavyHitters`). Batch can recount
@@ -33,10 +33,8 @@ import graft.sink.StoreProvider
   * the token-grain aggregate, and only that bounded frame reaches the
   * single-writer merge. State is O(m) regardless of stream length.
   *
-  * The merge is a non-idempotent read-modify-write, so it commits
-  * atomically WITH the (query, batch) ledger row inside one store
-  * transaction (the statsBatch lock-then-check protocol): a replayed
-  * batch sees its batchId in the ledger and skips.
+  * The merge is a non-idempotent read-modify-write, so it runs under
+  * [[graft.sink.KeyedStore.exactlyOnce]]: a replayed batch skips.
   */
 object TokenStream {
 
@@ -45,7 +43,7 @@ object TokenStream {
     * published top-k (token → counter lower bound; upper bound =
     * counter + dec), plus the shared idempotence ledger. */
   val Tables: Seq[String] =
-    Seq("hh_state", "hh_meta", "hh_topk", "graft_applied_batch")
+    Seq("hh_state", "hh_meta", "hh_topk", KeyedStore.Ledger)
 
   /** Per-partition raw-token-count sentinel — a value
     * `TextAnalysis.TokensExpr` can never tokenize to. */
@@ -87,69 +85,53 @@ object TokenStream {
     * micro-batch — candidates are computed here, NOT as a streaming
     * aggregation, which would keep cross-batch running token state
     * and double-apply under the writer's own merge): one
-    * single-writer transaction merges the batch summary into
+    * exactly-once transaction merges the batch summary into
     * `hh_state`, compresses to `m`, updates the meta counters, and
     * republishes the top-k — all atomically with the ledger row. */
   def hhBatch(provider: StoreProvider, m: Int, k: Int)(
-      batch: DataFrame, batchId: Long): Unit = {
-    batchCandidates(batch, m)
-      .repartition(1).foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val s = provider.open()
-        try {
-          s.txBegin()
-          // create-or-lock the ledger row, THEN check (statsBatch
-          // protocol): a concurrent or replayed attempt serializes on
-          // the row lock and skips
-          s.increment("graft_applied_batch", Seq("hh", "batch"), 0L)
-          if (s.get("graft_applied_batch", Seq("hh", "batch"))
-              .getOrElse(0L) <= batchId) {
-            var nBatch = 0L
-            val merged = mutable.HashMap.empty[String, Long]
-            s.scan("hh_state").foreach { case (key, v) =>
-              merged.update(key.head, v)
-            }
-            var candMass = 0L
-            rows.foreach { r =>
-              val t = r.getString(0)
-              val c = r.getLong(1)
-              if (t == NSentinel) nBatch += c
-              else {
-                candMass += c
-                merged.update(t, merged.getOrElse(t, 0L) + c)
-              }
-            }
-            // mass the partition summaries already dropped
-            var dec = s.get("hh_meta", Seq("dec")).getOrElse(0L) +
-              (nBatch - candMass)
-            if (merged.size > m) {
-              // subtract the (m+1)-th largest counter from all — the
-              // standard summary merge; ≤ m survivors by construction
-              val cut = merged.values.toSeq.sorted(Ordering.Long.reverse)(m)
-              val dead = Seq.newBuilder[String]
-              merged.keysIterator.foreach { key =>
-                val c = merged(key) - cut
-                if (c <= 0L) dead += key else merged.update(key, c)
-              }
-              dead.result().foreach(merged.remove)
-              dec += cut
-            }
-            s.replaceGroup("hh_state", Nil,
-              merged.toSeq.map { case (t, c) => (Seq(t), c) })
-            s.put("hh_meta", Seq("n"),
-              s.get("hh_meta", Seq("n")).getOrElse(0L) + nBatch)
-            s.put("hh_meta", Seq("dec"), dec)
-            val topk = merged.toSeq
-              .sortBy { case (t, c) => (-c, t) }.take(k)
-            s.replaceGroup("hh_topk", Nil,
-              topk.map { case (t, c) => (Seq(t), c) })
-            s.put("graft_applied_batch", Seq("hh", "batch"), batchId + 1L)
-          }
-          s.txCommit()
-        } finally s.close()
+      batch: DataFrame, batchId: Long): Unit =
+    KeyedStore.exactlyOnce(provider, "hh", batchId, parts = 1)(
+        batchCandidates(batch, m)) { (s, rows) =>
+      var nBatch = 0L
+      val merged = mutable.HashMap.empty[String, Long]
+      s.scan("hh_state").foreach { case (key, v) =>
+        merged.update(key.head, v)
       }
+      var candMass = 0L
+      rows.foreach { r =>
+        val t = r.getString(0)
+        val c = r.getLong(1)
+        if (t == NSentinel) nBatch += c
+        else {
+          candMass += c
+          merged.update(t, merged.getOrElse(t, 0L) + c)
+        }
+      }
+      // mass the partition summaries already dropped
+      var dec = s.get("hh_meta", Seq("dec")).getOrElse(0L) +
+        (nBatch - candMass)
+      if (merged.size > m) {
+        // subtract the (m+1)-th largest counter from all — the
+        // standard summary merge; ≤ m survivors by construction
+        val cut = merged.values.toSeq.sorted(Ordering.Long.reverse)(m)
+        val dead = Seq.newBuilder[String]
+        merged.keysIterator.foreach { key =>
+          val c = merged(key) - cut
+          if (c <= 0L) dead += key else merged.update(key, c)
+        }
+        dead.result().foreach(merged.remove)
+        dec += cut
+      }
+      s.replaceGroup("hh_state", Nil,
+        merged.toSeq.map { case (t, c) => (Seq(t), c) })
+      s.put("hh_meta", Seq("n"),
+        s.get("hh_meta", Seq("n")).getOrElse(0L) + nBatch)
+      s.put("hh_meta", Seq("dec"), dec)
+      val topk = merged.toSeq
+        .sortBy { case (t, c) => (-c, t) }.take(k)
+      s.replaceGroup("hh_topk", Nil,
+        topk.map { case (t, c) => (Seq(t), c) })
     }
-  }
 
   /** The full query: raw docs in, bounded per-partition summaries →
     * token-grain candidate aggregate → single-writer merge + top-k

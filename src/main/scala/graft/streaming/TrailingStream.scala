@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming trailing-window revenue monitor — the live twin of the
   * q257 batch panel (`Retention.trailingRevenue`): per order day, the
@@ -66,49 +66,42 @@ object TrailingStream {
   def trailBatch(provider: StoreProvider, windowDays: Int = 7)(
       batch: DataFrame, batchId: Long): Unit = {
     require(windowDays >= 1, "windowDays >= 1")
-    batch.repartition(1).foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val s = provider.open()
-        try {
-          s.txBegin()
-          rows.foreach { r =>
-            val day = r.getString(0)
-            s.put("tr_day_cents", Seq(day), r.getLong(1))
-            s.put("tr_day_orders", Seq(day), r.getLong(2))
-          }
-          // derived walk: ISO day strings sort chronologically; the
-          // lo pointer evicts days older than windowDays-1 in VALUE
-          // distance (calendar gaps shrink the window's content)
-          val cents = s.scan("tr_day_cents")
-            .map { case (k, v) => (k.head, v) }.sortBy(_._1)
-          val orders = s.scan("tr_day_orders")
-            .map { case (k, v) => (k.head, v) }.toMap
-          val days = cents.map(_._1)
-          val nums = days.map(d => java.time.LocalDate.parse(d).toEpochDay)
-          var lo = 0
-          var sumC = 0L
-          var sumO = 0L
-          val trail = Array.newBuilder[(String, Long, Long)]
-          var i = 0
-          while (i < days.length) {
-            sumC += cents(i)._2
-            sumO += orders(days(i))
-            while (nums(lo) < nums(i) - (windowDays - 1L)) {
-              sumC -= cents(lo)._2
-              sumO -= orders(days(lo))
-              lo += 1
-            }
-            trail += ((days(i), sumC, sumO))
-            i += 1
-          }
-          val t = trail.result()
-          s.replaceGroup("tr_trail_cents", Nil,
-            t.map { case (d, c, _) => (Seq(d), c) }.toSeq)
-          s.replaceGroup("tr_trail_orders", Nil,
-            t.map { case (d, _, o) => (Seq(d), o) }.toSeq)
-          s.txCommit()
-        } finally s.close()
+    KeyedStore.singleWriter(batch, provider) { (s, rows) =>
+      rows.foreach { r =>
+        val day = r.getString(0)
+        s.put("tr_day_cents", Seq(day), r.getLong(1))
+        s.put("tr_day_orders", Seq(day), r.getLong(2))
       }
+      // derived walk: ISO day strings sort chronologically; the
+      // lo pointer evicts days older than windowDays-1 in VALUE
+      // distance (calendar gaps shrink the window's content)
+      val cents = s.scan("tr_day_cents")
+        .map { case (k, v) => (k.head, v) }.sortBy(_._1)
+      val orders = s.scan("tr_day_orders")
+        .map { case (k, v) => (k.head, v) }.toMap
+      val days = cents.map(_._1)
+      val nums = days.map(d => java.time.LocalDate.parse(d).toEpochDay)
+      var lo = 0
+      var sumC = 0L
+      var sumO = 0L
+      val trail = Array.newBuilder[(String, Long, Long)]
+      var i = 0
+      while (i < days.length) {
+        sumC += cents(i)._2
+        sumO += orders(days(i))
+        while (nums(lo) < nums(i) - (windowDays - 1L)) {
+          sumC -= cents(lo)._2
+          sumO -= orders(days(lo))
+          lo += 1
+        }
+        trail += ((days(i), sumC, sumO))
+        i += 1
+      }
+      val t = trail.result()
+      s.replaceGroup("tr_trail_cents", Nil,
+        t.map { case (d, c, _) => (Seq(d), c) }.toSeq)
+      s.replaceGroup("tr_trail_orders", Nil,
+        t.map { case (d, _, o) => (Seq(d), o) }.toSeq)
     }
   }
 

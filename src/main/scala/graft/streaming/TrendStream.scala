@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.TextAnalysis
-import graft.sink.StoreProvider
+import graft.sink.{KeyedStore, StoreProvider}
 
 /** Streaming trending tokens over a document stream — the
   * ingestion-time twin of the q48/q54 vocabulary-head queries:
@@ -51,7 +51,7 @@ object TrendStream {
       batch: DataFrame, batchId: Long): Unit = {
     batch.persist()
     try {
-      AdClickStream.writePerPartition(batch, provider) { (s, r) =>
+      KeyedStore.perPartition(batch, provider) { (s, r) =>
         s.put("token_window_count", Seq(r.getString(0), r.getString(1)),
           r.getLong(2))
       }
@@ -59,7 +59,7 @@ object TrendStream {
       // windows cannot change rank; each re-rank is an indexed prefix
       // scan of that window's full token state, executor-side
       val touched = batch.select(col("window_key")).distinct()
-      AdClickStream.writePerPartition(touched, provider) { (s, r) =>
+      KeyedStore.perPartition(touched, provider) { (s, r) =>
         val w = r.getString(0)
         val top = s.scanPrefix("token_window_count", Seq(w))
           .map { case (key, n) => (key(1), n) }

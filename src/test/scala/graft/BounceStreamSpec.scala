@@ -151,6 +151,9 @@ class BounceStreamSpec extends SparkSpec {
       .toDF("user_id", "session_id", "entry_type", "exit_type", "steps")
     val body = BounceStream.bounceBatch(InMemoryProvider(store)) _
     body(visits, 0L)
+    // the on-disk ledger rows a live deployment's replays depend on
+    assert(new InMemoryStore(store).scan("graft_applied_batch").toSet == Set(
+      List("bounce", "p0") -> 1L, List("bounce", "batch") -> 1L))
     body(visits, 0L) // replay: the ledger row blocks a double-apply
     val st = new InMemoryStore(store)
     assert(st.scan("bounce_entries").map { case (k, v) => k.head -> v }

@@ -7,8 +7,35 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 
 import graft.ops.Retention
-import graft.sink.{InMemoryProvider, InMemoryStore}
+import graft.sink.{InMemoryProvider, InMemoryStore, KeyedStore, StoreProvider}
 import graft.streaming.{KmStream, SessionStream}
+
+/** Delegates to an InMemoryStore and logs each write and each
+  * transaction bracket in call order. Top-level (a nested class would
+  * capture the unserializable suite); the log is a JVM global (local
+  * mode). */
+object RecordingProvider {
+  val log = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
+final case class RecordingProvider(name: String) extends StoreProvider {
+  def open(): KeyedStore = new KeyedStore {
+    private val inner = new InMemoryStore(name)
+    private def rec(op: String, t: String): Unit = RecordingProvider.log.add(s"$op $t")
+    def increment(t: String, k: Seq[String], d: Long): Unit = {
+      rec("increment", t); inner.increment(t, k, d)
+    }
+    def get(t: String, k: Seq[String]): Option[Long] = inner.get(t, k)
+    def put(t: String, k: Seq[String], v: Long): Unit = { rec("put", t); inner.put(t, k, v) }
+    def insertKey(t: String, k: Seq[String]): Unit = { rec("insertKey", t); inner.insertKey(t, k) }
+    def replaceGroup(t: String, g: Seq[String], rows: Seq[(Seq[String], Long)]): Unit = {
+      rec("replaceGroup", t); inner.replaceGroup(t, g, rows)
+    }
+    def scan(t: String): Seq[(List[String], Long)] = inner.scan(t)
+    override def txBegin(): Unit = { inner.txBegin(); RecordingProvider.log.add("txBegin") }
+    override def txCommit(): Unit = { RecordingProvider.log.add("txCommit"); inner.txCommit() }
+    def close(): Unit = inner.close()
+  }
+}
 
 /** Streaming Kaplan–Meier: parity with the q356 batch curve across
   * batch splits (one kmLadder serves both), retro span extension by
@@ -87,6 +114,24 @@ class KmStreamSpec extends SparkSpec {
     KmStream.kmBatch(InMemoryProvider(name))(batch, 0L)
     assert((st.scan(KmStream.SpanTable).toSet,
       st.scan(KmStream.CurveTable).toSet) == once)
+  }
+
+  test("kmBatch writes its spans and its curve in one transaction") {
+    val s = spark
+    import s.implicits._
+    val name = "km-tx"
+    InMemoryStore.clear(name)
+    RecordingProvider.log.clear()
+    val batch = Seq((1L, 19723L, 19725L), (2L, 19723L, 19723L))
+      .toDF("user_id", "first_day", "last_day")
+    KmStream.kmBatch(RecordingProvider(name))(batch, 0L)
+    val ops = RecordingProvider.log.toArray.toSeq.map(_.toString)
+    // two users × (first, last) span puts, then the curve's
+    // DELETE + INSERTs: all inside one txBegin … txCommit
+    assert(ops.count(_ == s"put ${KmStream.SpanTable}") == 4, ops)
+    assert(ops.contains(s"replaceGroup ${KmStream.CurveTable}"), ops)
+    assert(ops.head == "txBegin" && ops.last == "txCommit", ops)
+    assert(!ops.tail.init.exists(_.startsWith("tx")), ops)
   }
 
   test("updateUser emits only when a bound moves") {

@@ -1,13 +1,13 @@
 package graft
 
 import java.nio.file.Files
-import java.sql.Timestamp
+import java.sql.{DriverManager, Timestamp}
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 
 import graft.ops.Market
-import graft.sink.{InMemoryProvider, InMemoryStore}
+import graft.sink.{InMemoryProvider, InMemoryStore, JdbcStore, KeyedStore}
 import graft.streaming.{MarkovStream, SessionStream}
 
 /** Streaming Markov removal-effect attribution: parity with the q292
@@ -91,6 +91,87 @@ class MarkovStreamSpec extends SparkSpec {
       st.scan(MarkovStream.StartsTable).toSet,
       st.scan(MarkovStream.CreditsTable).toSet) == once,
       "replaying batch 0 must change nothing")
+  }
+
+  /** One session's steps: a view start, view → click, click → purchase. */
+  private def funnelSteps = {
+    val s = spark
+    import s.implicits._
+    Seq(
+      (Option.empty[String], "view", 1L),
+      (Some("view"), "click", 1L),
+      (Some("click"), "purchase", 1L))
+      .toDF("prev_type", "next_type", "__ignored")
+      .select(col("prev_type"), col("next_type"))
+  }
+
+  private type Tables = (Set[(List[String], Long)], Set[(List[String], Long)],
+    Set[(List[String], Long)])
+
+  private def tables(st: KeyedStore): Tables =
+    (st.scan(MarkovStream.MatrixTable).toSet,
+      st.scan(MarkovStream.StartsTable).toSet,
+      st.scan(MarkovStream.CreditsTable).toSet)
+
+  test("creditsBatch on Derby: crash after a real matrix increment rolls back; replay is exactly-once") {
+    val dir = Files.createTempDirectory("graft-derby-markov").toString
+    val url = s"jdbc:derby:$dir/db"
+    val boot = DriverManager.getConnection(s"$url;create=true")
+    Seq(
+      """CREATE TABLE ma_matrix (k1 VARCHAR(32), k2 VARCHAR(32),
+        | v BIGINT, PRIMARY KEY (k1, k2))""".stripMargin,
+      "CREATE TABLE ma_starts (k1 VARCHAR(32), v BIGINT, PRIMARY KEY (k1))",
+      """CREATE TABLE ma_credits (k1 VARCHAR(32), k2 VARCHAR(32),
+        | v BIGINT, PRIMARY KEY (k1, k2))""".stripMargin,
+      """CREATE TABLE graft_applied_batch (k1 VARCHAR(32), k2 VARCHAR(32),
+        | v BIGINT, PRIMARY KEY (k1, k2))""".stripMargin
+    ).foreach(boot.createStatement().executeUpdate)
+    boot.close()
+    def derby(): Tables = {
+      val st = new JdbcStore(DriverManager.getConnection(url))
+      try tables(st) finally st.close()
+    }
+    // the same batch applied once to a fresh in-memory store
+    val name = "markov-derby-expected"
+    InMemoryStore.clear(name)
+    MarkovStream.creditsBatch(InMemoryProvider(name), Channels)(funnelSteps, 0L)
+    val once = tables(new InMemoryStore(name))
+    assert(once._1.nonEmpty && once._3.nonEmpty)
+
+    val body = MarkovStream.creditsBatch(
+      CrashOnceProvider(url, MarkovStream.MatrixTable), Channels) _
+    // first attempt: a REAL matrix increment lands, then the task dies
+    // before the ledger row and the commit — the transaction must roll
+    // the increment back with it
+    CrashOnceProvider.armed.set(true)
+    intercept[Exception] { body(funnelSteps, 0L) }
+    assert(!CrashOnceProvider.armed.get, "the injected crash never fired")
+    assert(derby() == ((Set.empty, Set.empty, Set.empty)))
+    body(funnelSteps, 0L) // replay: nothing was committed, so it applies
+    assert(derby() == once)
+    body(funnelSteps, 0L) // a second replay after commit is skipped
+    assert(derby() == once)
+  }
+
+  test("creditsBatch replay on a ledger with only its batch row does not double-count") {
+    // batch 0 as applied by a writer that kept only ("markov", "batch")
+    // in the ledger: its matrix and start counts, no per-partition row
+    val name = "markov-batch-row-only"
+    InMemoryStore.clear(name)
+    val st = new InMemoryStore(name)
+    st.put(MarkovStream.MatrixTable, Seq("view", "click"), 1L)
+    st.put(MarkovStream.MatrixTable, Seq("click", "purchase"), 1L)
+    st.put(MarkovStream.StartsTable, Seq("view"), 1L)
+    st.put("graft_applied_batch", Seq("markov", "batch"), 1L)
+    def counts = (st.scan(MarkovStream.MatrixTable).toMap,
+      st.scan(MarkovStream.StartsTable).toMap)
+    val seeded = counts
+    MarkovStream.creditsBatch(InMemoryProvider(name), Channels)(funnelSteps, 0L)
+    assert(counts == seeded, "replaying batch 0 must change nothing")
+    // the next batch still applies
+    MarkovStream.creditsBatch(InMemoryProvider(name), Channels)(funnelSteps, 1L)
+    assert(counts == ((seeded._1.map { case (k, v) => k -> 2 * v },
+      seeded._2.map { case (k, v) => k -> 2 * v })))
   }
 
   test("updateUser emits a start row per new session and skips stragglers") {

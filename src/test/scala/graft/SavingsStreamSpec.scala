@@ -7,39 +7,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.ops.Dedup
-import graft.sink.{InMemoryProvider, InMemoryStore, JdbcProvider, JdbcStore, KeyedStore, StoreProvider}
+import graft.sink.{InMemoryProvider, InMemoryStore, JdbcProvider}
 import graft.streaming.{CorpusStream, NearDupStream}
-
-/** Fault injector for the savings-ledger exactly-once test: a real
-  * Derby JdbcStore that, while armed, throws ONCE right after a
-  * savings-table increment — after real work, before the ledger write
-  * and commit. Top-level for serializability; armed is a JVM global
-  * (local mode). */
-object SavingsCrashProvider {
-  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
-}
-final case class SavingsCrashProvider(url: String) extends StoreProvider {
-  def open(): KeyedStore = new KeyedStore {
-    private val inner = new JdbcStore(DriverManager.getConnection(url))
-    def increment(table: String, key: Seq[String], delta: Long): Unit = {
-      inner.increment(table, key, delta)
-      if (table == NearDupStream.SavingsTable &&
-          SavingsCrashProvider.armed.compareAndSet(true, false))
-        throw new RuntimeException("injected crash: after increment, before commit")
-    }
-    def get(t: String, k: Seq[String]): Option[Long] = inner.get(t, k)
-    def put(t: String, k: Seq[String], v: Long): Unit = inner.put(t, k, v)
-    def insertKey(t: String, k: Seq[String]): Unit = inner.insertKey(t, k)
-    def replaceGroup(t: String, g: Seq[String],
-        rows: Seq[(Seq[String], Long)]): Unit = inner.replaceGroup(t, g, rows)
-    def scan(t: String): Seq[(List[String], Long)] = inner.scan(t)
-    override def scanPrefix(t: String, p: Seq[String]): Seq[(List[String], Long)] =
-      inner.scanPrefix(t, p)
-    override def txBegin(): Unit = inner.txBegin()
-    override def txCommit(): Unit = inner.txCommit()
-    def close(): Unit = inner.close()
-  }
-}
 
 /** q102/q105's streaming twin: the running per-source dedup-savings
   * table must agree with the batch accounting
@@ -131,11 +100,12 @@ class SavingsStreamSpec extends SparkSpec {
     ).foreach(boot.createStatement().executeUpdate)
     boot.close()
 
-    val body = NearDupStream.savingsBatch(SavingsCrashProvider(url), corpus) _
+    val body = NearDupStream.savingsBatch(
+      CrashOnceProvider(url, NearDupStream.SavingsTable), corpus) _
     // first attempt: a REAL savings increment lands, then the task
     // dies before the ledger row and the commit — the transaction
     // must roll the increment back with it
-    SavingsCrashProvider.armed.set(true)
+    CrashOnceProvider.armed.set(true)
     intercept[Exception] { body(arrivalsDf, 0L) }
     // replay of the same batch id: nothing was committed, so it
     // applies cleanly — totals equal exactly one application
@@ -151,6 +121,9 @@ class SavingsStreamSpec extends SparkSpec {
     InMemoryStore.clear(store)
     val provider = InMemoryProvider(store)
     NearDupStream.savingsBatch(provider, corpus)(arrivalsDf, 0L)
+    // the on-disk ledger rows a live deployment's replays depend on
+    assert(new InMemoryStore(store).scan("graft_applied_batch").toSet == Set(
+      List("savings", "p0") -> 1L, List("savings", "batch") -> 1L))
     val once = NearDupStream.savingsReport(provider)
     NearDupStream.savingsBatch(provider, corpus)(arrivalsDf, 0L) // replay
     assert(NearDupStream.savingsReport(provider) == once)

@@ -16,21 +16,20 @@ import graft.sink.{InMemoryProvider, InMemoryStore, JdbcStore, KeyedStore, Store
 import graft.streaming.AdClickStream
 
 /** Fault injector for the exactly-once tests: delegates to a real
-  * Derby-backed JdbcStore but, while armed, throws ONCE right after a
-  * click-count increment — i.e. after real work, before the ledger
+  * Derby-backed JdbcStore but, while armed, throws ONCE right after an
+  * increment of `table` — i.e. after real work, before the ledger
   * row and the commit: exactly the window the per-partition
   * transaction must cover. Top-level (a nested class would capture
   * the unserializable suite); armed is a JVM global (local mode). */
 object CrashOnceProvider {
   val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
-final case class CrashOnceProvider(url: String) extends StoreProvider {
+final case class CrashOnceProvider(url: String, table: String) extends StoreProvider {
   def open(): KeyedStore = new KeyedStore {
     private val inner = new JdbcStore(DriverManager.getConnection(url))
-    def increment(table: String, key: Seq[String], delta: Long): Unit = {
-      inner.increment(table, key, delta)
-      if (table == "ad_user_click_count" &&
-          CrashOnceProvider.armed.compareAndSet(true, false))
+    def increment(t: String, key: Seq[String], delta: Long): Unit = {
+      inner.increment(t, key, delta)
+      if (t == table && CrashOnceProvider.armed.compareAndSet(true, false))
         throw new RuntimeException("injected crash: after increment, before commit")
     }
     def get(t: String, k: Seq[String]): Option[Long] = inner.get(t, k)
@@ -231,6 +230,11 @@ class StreamingSpec extends SparkSpec {
     val parsed = AdAnalytics.parseAdLog(batch)
     val body = AdClickStream.statsBatch(InMemoryProvider(store), 100L) _
     body(parsed, 0L)
+    // the on-disk ledger rows a live deployment's replays depend on:
+    // the one key's partition of the 32-way keyed repartition, then
+    // the batch-grain marker
+    assert(new InMemoryStore(store).scan("graft_applied_batch").toSet == Set(
+      List("stats", "p4") -> 1L, List("stats", "batch") -> 1L))
     body(parsed, 0L) // replay of the SAME batch must be a no-op
     val st = new InMemoryStore(store)
     assert(st.scan("ad_user_click_count").toMap ==
@@ -339,7 +343,7 @@ class StreamingSpec extends SparkSpec {
       Seq(line(T0, "East", "Metro", u, 1), line(T0 + 1000L * u, "East", "Metro", u, 1)))
     val parsed = AdAnalytics.parseAdLog(rows.toDF("value"))
     val body = AdClickStream.statsBatch(
-      CrashOnceProvider(s"jdbc:derby:$dir/db"), 100L) _
+      CrashOnceProvider(s"jdbc:derby:$dir/db", "ad_user_click_count"), 100L) _
 
     // first attempt: one task performs a REAL increment, then dies
     // before writing its ledger row or committing — the transaction
@@ -490,7 +494,7 @@ class StreamingSpec extends SparkSpec {
     (0 until users).foreach(c => mem.addData(
       line(T0 + 1000L * c, "East", "Metro", c + 1, 1),
       line(T0 + 1000L * c + 500, "East", "Metro", (c + users / 2) % users + 1, 1)))
-    val provider = CrashOnceProvider(s"jdbc:derby:$dir/db")
+    val provider = CrashOnceProvider(s"jdbc:derby:$dir/db", "ad_user_click_count")
     val ckpt = Files.createTempDirectory("graft-ckpt").toString
 
     CrashOnceProvider.armed.set(true)
@@ -560,6 +564,11 @@ class StreamingSpec extends SparkSpec {
       st4.scan("ad_stat").filter(_._1.startsWith(Seq("d"))).toMap)
     assert(st4.scanPrefix("ad_stat", Seq("d")).toMap ==
       Map(List("d", "p") -> 105L, List("d", "q") -> 4L))
+    // an empty prefix is the whole table: the derived-table rebuilds
+    // of the single-writer streams replace their table this way
+    assert(st4.scanPrefix("ad_stat", Nil).toMap == st4.scan("ad_stat").toMap)
+    st4.replaceGroup("ad_stat", Nil, Seq((Seq("f", "p"), 3L)))
+    assert(st4.scan("ad_stat").toMap == Map(List("f", "p") -> 3L))
     st4.close()
   }
 }
