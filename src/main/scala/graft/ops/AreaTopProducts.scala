@@ -416,7 +416,10 @@ object AreaTopProducts {
     * persisted (ONE fact scan: the scalar subtree and the tie filter
     * read the same cached partitions) and the scalar max is a regular
     * parallel aggregate — partial per-partition maxes, a 1-row final
-    * — reattached via crossJoin(broadcast(·)). Never an unbounded
+    * — reattached via crossJoin(broadcast(·)). The cache is filled
+    * before the broadcast is planned, so the broadcast build reads
+    * cached blocks: the fact pass never runs inside the broadcast
+    * thread, under `spark.sql.broadcastTimeout`. Never an unbounded
     * no-partitionBy window, which would plan Exchange SinglePartition
     * over the WHOLE supplier grain (~1e9 rows at the design point) and
     * sort it in one task; never a global sort to pick the head, which
@@ -434,6 +437,7 @@ object AreaTopProducts {
       .groupBy(col("l_suppkey"))
       .agg(sum(col("rev_cents")).as("total_cents"))
       .persist()
+    rev.count()
     val mx = rev.agg(max(col("total_cents")).as("__max_cents"))
     rev.crossJoin(broadcast(mx))
       .filter(col("total_cents") === col("__max_cents"))

@@ -1146,11 +1146,14 @@ object Market {
           s" gap * shiftleft(CAST(1 AS BIGINT), ${w - 1} - (n - idx))" +
           " ELSE 0 END")).as("xw"))
       .persist()
+    // filled here, so the broadcast build below reads cached blocks
+    // instead of running the fact pass under broadcastTimeout
+    g.count()
     // the global day-span scalar: max over parts of each part's max
     // day = max over all (part, day) rows, so a parallel agg over the
     // persisted part-grain frame equals the old separate panel pass —
-    // one fact scan total (the broadcast subtree materializes the
-    // cache the main side then reads), and no single-partition window
+    // one fact scan total (the cache both sides read), and no
+    // single-partition window
     val span = g.agg(
       (max(col("__d1")) - min(col("__d0")) + 1L).as("span"))
     g.crossJoin(broadcast(span))
@@ -1204,6 +1207,9 @@ object Market {
           " AS BIGINT) DIV 7").as("wk"))
       .agg(sum(col("l_quantity").cast("long")).as("units"))
       .persist()
+    // filled here, so the broadcast build below reads cached blocks
+    // instead of running the fact pass under broadcastTimeout
+    pw.count()
     val stats = pw.groupBy(col("partkey"))
       .agg(count(lit(1)).as("nz"), sum(col("units")).as("tot"))
     val ranked = pw.withColumn("rn", row_number().over(

@@ -20,8 +20,31 @@ import org.apache.spark.sql.functions._
   * Scale notes: the only shuffle is the window partitioning by
   * user_id. At 100 TB the user_id key space is huge (no skew beyond a
   * bot user); sessionization is embarrassingly parallel per user.
+  *
+  * Session-grain aggregates key on two numbers, (user_id,
+  * [[sessionKey]]), not on the per-event `session_id` string: no
+  * string concat per event and no string hashing. `session_id` is
+  * built once per session, and only where the output carries it.
   */
 object Sessionize {
+
+  /** The session half of a session-grain grouping key: `session_seq`,
+    * null where `user_id` is null. Grouping on (user_id, sessionKey)
+    * gives the groups of (session_id, user_id): a null user's
+    * `session_id` is null whatever its seq, so all null-user events
+    * fold into one null session, as the oracles' `GROUP BY
+    * session_id, user_id` also does. */
+  private val sessionKey =
+    when(col("user_id").isNotNull, col("session_seq")).as("session_seq")
+
+  /** `user_id + "_" + session_seq`, null when either is null. */
+  private def sessionId =
+    concat(col("user_id").cast("string"), lit("_"), col("session_seq").cast("string"))
+
+  /** A (user_id, sessionKey) aggregate with its key columns replaced
+    * by the leading (session_id, user_id) pair. */
+  private def withSessionId(bySession: DataFrame): DataFrame =
+    bySession.select(sessionId.as("session_id"), col("*")).drop("session_seq")
 
   /** Assign gap-based session ids: a new session starts when the time
     * since the user's previous event exceeds `gapSeconds`.
@@ -38,9 +61,7 @@ object Sessionize {
         when(col("prev_us").isNull ||
           col("ts_us") - col("prev_us") > gapSeconds * 1000000L, 1L).otherwise(0L))
       .withColumn("session_seq", sum(col("is_new")).over(run))
-      .withColumn(
-        "session_id",
-        concat(col("user_id").cast("string"), lit("_"), col("session_seq").cast("string")))
+      .withColumn("session_id", sessionId)
       .drop("prev_us", "is_new")
   }
 
@@ -57,14 +78,14 @@ object Sessionize {
     * double→decimal rounding).
     */
   def sessionAggregates(sessionized: DataFrame): DataFrame =
-    sessionized
-      .groupBy(col("session_id"), col("user_id"))
+    withSessionId(sessionized
+      .groupBy(col("user_id"), sessionKey)
       .agg(
         count(lit(1)).as("step_length"),
         expr("(max(ts_us) - min(ts_us)) div 1000000").as("visit_length_s"),
         date_format(min(col("ts")), "yyyy-MM-dd HH:mm:ss").as("start_time"),
         concat_ws(",", array_sort(collect_set(col("event_type")))).as("event_types"),
-        sum(floor(col("value") * lit(100.0))).as("total_value_cents"))
+        sum(floor(col("value") * lit(100.0))).as("total_value_cents")))
 
   /** Convenience: events -> session aggregates. */
   def apply(events: DataFrame, gapSeconds: Long = 1800L): DataFrame =
@@ -98,15 +119,15 @@ object Sessionize {
     val bySession = Window
       .partitionBy(col("user_id"), col("session_seq"))
       .orderBy(col("ts"), col("event_id"))
-    assignSessions(events, gapSeconds)
+    withSessionId(assignSessions(events, gapSeconds)
       .withColumn("gap_us", col("ts_us") - lag(col("ts_us"), 1).over(bySession))
-      .groupBy(col("session_id"), col("user_id"))
+      .groupBy(col("user_id"), sessionKey)
       .agg(
         count(lit(1)).as("n_events"),
         expr("(max(ts_us) - min(ts_us)) div 1000000").as("duration_s"),
         min(col("gap_us")).as("min_gap_us"),
         max(col("gap_us")).as("max_gap_us"),
-        sum(col("gap_us")).as("sum_gap_us"))
+        sum(col("gap_us")).as("sum_gap_us")))
       .withColumn("avg_gap_us",
         expr("CASE WHEN n_events > 1 THEN sum_gap_us div (n_events - 1) END"))
       .withColumn("flag_fast",
@@ -168,7 +189,7 @@ object Sessionize {
       maxSteps: Int = 5, k: Int = 20,
       convType: String = "purchase"): DataFrame = {
     assignSessions(events, gapSeconds)
-      .groupBy(col("session_id"), col("user_id"))
+      .groupBy(col("user_id"), sessionKey)
       .agg(
         // struct sort by (ts_us, event_id) = deterministic event order
         expr(s"""concat_ws('>', slice(transform(
@@ -207,7 +228,7 @@ object Sessionize {
     * at any volume. */
   def entryExit(events: DataFrame, gapSeconds: Long = 1800L): DataFrame = {
     val sessions = assignSessions(events, gapSeconds)
-      .groupBy(col("session_id"), col("user_id"))
+      .groupBy(col("user_id"), sessionKey)
       .agg(
         min(struct(col("ts_us"), col("event_id"), col("event_type")))
           .getField("event_type").as("entry_type"),

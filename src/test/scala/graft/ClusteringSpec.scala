@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.prop.TableDrivenPropertyChecks
 
@@ -84,27 +80,11 @@ class ClusteringSpec extends SparkSpec with TableDrivenPropertyChecks {
   test("connectedComponents over one partition starts no job while it is built") {
     // the local union-find has seen every edge: no distinct, no
     // star-forest probe, no rounds run before the labels are read
-    val sc = spark.sparkContext
-    val fenceKey = "graft.test.fence"
-    val started = new AtomicInteger(0)
-    val fenceStarted = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(fenceKey) != null)) fenceStarted.countDown()
-        else started.incrementAndGet()
-    }
     val pairs = (1L to 19L).map(i => (i, i + 1))
-    sc.addSparkListener(listener)
-    try {
-      val out = Clustering.connectedComponents(pairs.toDF("doc_a", "doc_b").coalesce(1))
-      // the listener bus delivers in order: once the fence job's start
-      // arrives, every job started before it has been counted
-      sc.setLocalProperty(fenceKey, "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(fenceKey, null)
-      assert(fenceStarted.await(60, TimeUnit.SECONDS), "fence job start never delivered")
-      assert(started.get == 0, s"building connectedComponents started ${started.get} jobs")
-      assert(out.as[(Long, Long)].collect().toMap == unionFind(pairs))
-    } finally sc.removeSparkListener(listener)
+    val (out, started) = withJobCount(
+      Clustering.connectedComponents(pairs.toDF("doc_a", "doc_b").coalesce(1)))
+    assert(started == 0, s"building connectedComponents started $started jobs")
+    assert(out.as[(Long, Long)].collect().toMap == unionFind(pairs))
   }
 
   test("connectedComponents on Int ids: same labels, component stays int") {

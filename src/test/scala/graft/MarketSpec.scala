@@ -395,4 +395,29 @@ class MarketSpec extends SparkSpec {
     val credits = rows.flatMap(_._3)
     assert(credits.sum <= 10000L && credits.sum > 10000L - rows.size)
   }
+
+  test("q179/q318/q323 fill their persisted grain frame before the scalar's broadcast is built") {
+    // the broadcast build must read cached blocks, not run the first
+    // fact pass in the broadcast thread under broadcastTimeout: every
+    // cache the built (not yet executed) frame reads is already full
+    val li = (1 to 40).map { i =>
+      (i.toLong, (i % 5).toLong, (i % 3).toLong, (i % 7 + 1).toDouble,
+        100.0 + i, 0.05, Timestamp.valueOf(f"1996-${i % 12 + 1}%02d-${i % 27 + 1}%02d 00:00:00"))
+    }.toDF("l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
+      "l_extendedprice", "l_discount", "l_shipdate")
+    val sup = Seq((0L, "s0"), (1L, "s1"), (2L, "s2")).toDF("s_suppkey", "s_name")
+    Seq(
+      "q179" -> graft.ops.AreaTopProducts.topSupplier(li, sup, "1996-01-01", "1997-01-01"),
+      "q318" -> Market.crostonDemand(li, minDemands = 1),
+      "q323" -> Market.newsvendorStock(li)).foreach { case (q, df) =>
+      val caches = df.queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }
+      assert(caches.nonEmpty, s"$q reads no cache")
+      caches.foreach { r =>
+        assert(r.cacheBuilder.isCachedColumnBuffersLoaded,
+          s"$q: the grain cache is first filled when the query runs")
+      }
+    }
+  }
 }

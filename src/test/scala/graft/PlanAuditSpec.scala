@@ -100,7 +100,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q02 sessionize: the session aggregate reuses the window's user_id partitioning (one shuffle total)") {
-    // groupBy(session_id, user_id) — user_id in the grouping key lets
+    // groupBy(user_id, session_seq) — user_id in the grouping key lets
     // hashpartitioning(user_id) satisfy the aggregate's distribution,
     // so sessionize = exactly one fact shuffle end-to-end.
     val p = plan("q02_sessionize")
@@ -435,7 +435,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q112 bot sessions: gap lag + session aggregate both ride the one user_id window shuffle") {
-    // lag over (user_id, session_seq) and groupBy(session_id, user_id)
+    // lag over (user_id, session_seq) and groupBy(user_id, session_seq)
     // are each satisfied by hashpartitioning(user_id) — the whole
     // verdict table is ONE fact shuffle, like q02.
     val p = plan("q112_bot_sessions")

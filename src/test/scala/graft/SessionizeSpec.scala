@@ -338,4 +338,78 @@ class SessionizeSpec extends SparkSpec {
       assert(bp <= 10000L && bp > 10000L - s.length, s"model $m: $bp")
     }
   }
+
+  // --- session-grain keys ------------------------------------------------
+
+  /** User 1 has two sessions; two null-user events lie 60 min apart. A
+    * null user_id makes a null session_id, so grouping on (session_id,
+    * user_id) folds every null-user event into ONE null session. */
+  private lazy val nullUserFixture = Seq[(Long, Timestamp, Option[Long], String, Double, String)](
+    (0L, Timestamp.valueOf("2024-01-01 00:00:00"), Some(1L), "view", 1.0, "{}"),
+    (1L, Timestamp.valueOf("2024-01-01 00:10:00"), Some(1L), "click", 1.0, "{}"),
+    (2L, Timestamp.valueOf("2024-01-01 01:00:00"), Some(1L), "purchase", 1.0, "{}"),
+    (3L, Timestamp.valueOf("2024-01-01 00:00:00"), None, "view", 1.0, "{}"),
+    (4L, Timestamp.valueOf("2024-01-01 01:00:00"), None, "click", 1.0, "{}"),
+    (5L, Timestamp.valueOf("2024-01-01 00:05:00"), Some(2L), "signup", 1.0, "{}")
+  ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+
+  /** (session_id, user_id) → events, grouping the sessionized events on
+    * the string key. */
+  private lazy val stringKeyedSessions: Map[(String, Option[Long]), Long] =
+    Sessionize.assignSessions(nullUserFixture)
+      .groupBy(col("session_id"), col("user_id")).count()
+      .as[(Option[String], Option[Long], Long)].collect()
+      .map { case (s, u, n) => (s.orNull, u) -> n }.toMap
+
+  private def keyed(df: org.apache.spark.sql.DataFrame, n: String) =
+    df.select(col("session_id"), col("user_id"), col(n))
+      .as[(Option[String], Option[Long], Long)].collect()
+      .map { case (s, u, c) => (s.orNull, u) -> c }.toMap
+
+  test("sessionAggregates: the groups of (session_id, user_id), null users folded into one session") {
+    assert(stringKeyedSessions == Map(
+      ("1_1", Some(1L)) -> 2L, ("1_2", Some(1L)) -> 1L,
+      ((null, None)) -> 2L, ("2_1", Some(2L)) -> 1L))
+    val out = Sessionize(nullUserFixture)
+    assert(out.columns.toSeq == Seq("session_id", "user_id", "step_length",
+      "visit_length_s", "start_time", "event_types", "total_value_cents"))
+    assert(keyed(out, "step_length") == stringKeyedSessions)
+    val nullSession = out.filter(col("user_id").isNull).collect().toSeq
+    assert(nullSession.map(r => (r.getAs[Long]("visit_length_s"),
+      r.getAs[String]("start_time"), r.getAs[String]("event_types"),
+      r.getAs[Long]("total_value_cents"))) ==
+      Seq((3600L, "2024-01-01 00:00:00", "click,view", 200L)))
+  }
+
+  test("botSessions: the groups of (session_id, user_id), null users folded into one session") {
+    val out = Sessionize.botSessions(nullUserFixture)
+    assert(out.columns.toSeq == Seq("session_id", "user_id", "n_events",
+      "duration_s", "min_gap_us", "max_gap_us", "sum_gap_us", "avg_gap_us",
+      "flag_fast", "flag_metronome", "is_bot"))
+    assert(keyed(out, "n_events") == stringKeyedSessions)
+    val solo = out.filter(col("user_id").isNull).collect().head
+    // each null-user event opens its own gap window, so no gap is seen
+    assert(solo.getAs[Long]("duration_s") == 3600L)
+    assert(solo.isNullAt(solo.fieldIndex("min_gap_us")))
+    assert(out.filter(col("session_id") === "1_1").select("sum_gap_us").as[Long].head() == 600000000L)
+  }
+
+  test("sessionPaths: the null-user events make one two-step session") {
+    val out = Sessionize.sessionPaths(nullUserFixture, maxSteps = 5, k = 10)
+      .as[(String, Long, Long, Long)].collect().toSet
+    assert(out == Set(
+      ("view>click", 2L, 0L, 0L), // 1_1 and the null session
+      ("purchase", 1L, 1L, 10000L),
+      ("signup", 1L, 0L, 0L)))
+  }
+
+  test("entryExit: the null-user events make one session entering at view, exiting at click") {
+    val out = Sessionize.entryExit(nullUserFixture)
+      .as[(String, Long, Long, Long, Long)].collect().toSet
+    assert(out == Set(
+      ("view", 2L, 0L, 0L, 0L),
+      ("click", 0L, 2L, 0L, 0L),
+      ("purchase", 1L, 1L, 1L, 10000L),
+      ("signup", 1L, 1L, 1L, 10000L)))
+  }
 }

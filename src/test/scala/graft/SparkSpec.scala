@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -40,6 +44,30 @@ abstract class SparkSpec extends AnyFunSuite {
     s
   }
   def sf: String = TestSpark.sf0001
+
+  /** `body`'s value and the number of Spark jobs started while it ran.
+    * A fence job, told apart by a local property, runs after `body`:
+    * the listener bus delivers in order, so once the fence's start
+    * arrives, every job started before it has been counted. */
+  def withJobCount[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val fenceKey = "graft.test.fence"
+    val started = new AtomicInteger(0)
+    val fenceStarted = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(fenceKey) != null)) fenceStarted.countDown()
+        else started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty(fenceKey, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(fenceKey, null)
+      assert(fenceStarted.await(60, TimeUnit.SECONDS), "fence job start never delivered")
+      (out, started.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 /** Minimal GroupState stub for direct state-transition-function
